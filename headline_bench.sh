@@ -55,10 +55,9 @@ if [ "$QUIET" != "1" ] && [ "$FORCE" != "1" ]; then
   exit 2
 fi
 echo "== headline GaBench start $(date -u +%H:%M:%S) (calibration=$CAL membw=$BW)"
-# ParallelGC + speculation off: the round-12 resolution of the
-# "deferred headline row" — G1 cost 2.1-2.6x at this scale and
-# local-mode speculation another ~1.25x (see BASELINE.md round-12)
-SPARK_GRAFT_SPECULATION=false SPARK_GRAFT_CPUS=32 \
+# ParallelGC: the round-12 resolution of the "deferred headline row"
+# — G1 cost 2.1-2.6x at this scale (see BASELINE.md round-12)
+SPARK_GRAFT_CPUS=32 \
   java -Xmx64g -XX:+UseParallelGC $OPENS -cp "$CP" \
   graft.GaBench 10000 1330000 "$GENS" 32 2>/dev/null | tail -1
 echo "== headline GaBench end $(date -u +%H:%M:%S)"

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-inspection main: prints the formatted physical plan of each
   * named query (all queries when no names given) so scan pushdown
   * (`PushedFilters`, pruned `ReadSchema`), join strategies
@@ -15,23 +13,9 @@ object Explain {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = if (args.length > 1) args.drop(1).toSeq
       else SparkEntry.queries.keys.toSeq.sorted
-    // session mirrors graft.Bench exactly (extensions, conf) so the
-    // dumped plans are the plans the bench actually times
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new GraftExtensions)
-      .appName("graft-explain")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.sql.parquet.aggregatePushdown", "true")
-      .config("spark.sql.extensions", "graft.sources.GraftSqlExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // the same session as graft.Bench, so the dumped plans are the
+    // plans the bench actually times
+    val spark = Session.local(Session.cpus())
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { name =>
       SparkEntry.queries.get(name) match {

@@ -1,33 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import graft.core.GaConfig
 import graft.sga.Sga
-
-/** Per-stage accounting: aggregates executor run time / shuffle bytes
-  * by stage name so the generation cost decomposes into scan, shuffle
-  * write/read, tournament mapPartitions, and checkpoint. */
-private class StageProfiler extends SparkListener {
-  case class Acc(var n: Int = 0, var runMs: Long = 0L, var shufWrite: Long = 0L,
-    var shufRead: Long = 0L)
-  val byName = scala.collection.mutable.LinkedHashMap[String, Acc]()
-  override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-    val info = sc.stageInfo
-    // first line of the stage name = the triggering call site
-    val key = info.name.takeWhile(_ != '\n').replaceAll(":[0-9]+$", "")
-    val acc = byName.getOrElseUpdate(key, Acc())
-    acc.n += 1
-    acc.runMs += info.taskMetrics.executorRunTime
-    acc.shufWrite += info.taskMetrics.shuffleWriteMetrics.bytesWritten
-    acc.shufRead += info.taskMetrics.shuffleReadMetrics.remoteBytesRead +
-      info.taskMetrics.shuffleReadMetrics.localBytesRead
-  }
-  def report(): String = byName.toSeq.sortBy(-_._2.runMs).take(8).map {
-    case (k, a) => f"  $k%-40s stages=${a.n}%3d cpuSec=${a.runMs / 1000.0}%8.1f " +
-      f"shufW=${a.shufWrite / 1e6}%8.1f MB shufR=${a.shufRead / 1e6}%8.1f MB"
-  }.mkString("\n")
-}
 
 /** The SURVEY §6 local GA yardstick: sec/generation for the pinned SGA
   * config (n=4096, pop=65536, 8 partitions, 20 generations, seed 42).
@@ -43,26 +17,7 @@ object GaBench {
     val popSize = args.lift(1).map(_.toLong).getOrElse(65536L)
     val gens = args.lift(2).map(_.toInt).getOrElse(20)
     val parts = args.lift(3).map(_.toInt).getOrElse(8)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-ga-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // reference op 21 (MapReduce.java:281): straggler re-launch;
-      // effective on a cluster manager. Env-overridable because under
-      // local[*] it is NOT free at headline scale: all tasks share
-      // the same 32 cores, so a speculative copy of a long straggler
-      // ADDS load instead of dodging a bad node (the round-12 A/B
-      // below quantifies it) — a cluster deployment keeps it on, a
-      // single-host measurement turns it off
-      .config("spark.speculation",
-        sys.env.getOrElse("SPARK_GRAFT_SPECULATION", "true"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val profiler = new StageProfiler
-    if (sys.env.contains("SPARK_GRAFT_PROFILE"))
-      spark.sparkContext.addSparkListener(profiler)
+    val spark = Session.local(Session.cpus())
     val cfg = GaConfig(nBits = nBits, popSize = popSize, tournamentSize = 5,
       numPartitions = parts, seed = 42, maxGenerations = gens,
       convergenceSlack = -1) // slack -1: never converges early, runs all gens
@@ -70,11 +25,6 @@ object GaBench {
     val r = Sga.runLoop(spark, cfg)
     val sec = (System.nanoTime() - t0) / 1e9
     println(f"""{"metric":"sga_sec_per_generation","value":${sec / r.generations}%.3f,"unit":"sec","generations":${r.generations},"total_sec":$sec%.3f,"best":${r.bestFitness},"n":$nBits,"pop":$popSize}""")
-    if (sys.env.contains("SPARK_GRAFT_PROFILE")) {
-      Thread.sleep(500) // let the listener bus drain
-      println("stage profile (top by executor cpu):")
-      println(profiler.report())
-    }
     spark.stop()
   }
 }

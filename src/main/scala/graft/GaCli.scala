@@ -22,6 +22,12 @@ import graft.cga.{Cga, CgaConfig}
   * (/root/reference/src/edu/illinois/ga/MapReduce.java:432) and
   * `CGA:<it>:<pop>:<best>:<totalBits>:<strLen>:<un>:<millis>`
   * (/root/reference/src/edu/illinois/ga/CGA.java:494).
+  *
+  * Reference op 21, `setSpeculativeExecution(true)` (MapReduce.java:281,
+  * CGA.java:339-341), is Spark's `spark.speculation=true` on a cluster
+  * manager. It is left off here: under a local master a speculative
+  * copy shares the same cores and adds load instead of dodging a slow
+  * node (measured ~1.25x per generation, BASELINE.md round 12).
   */
 object GaCli {
 
@@ -32,21 +38,8 @@ object GaCli {
     // only stop a session this invocation created — embedding callers
     // (tests, notebooks) keep theirs
     val ownSession = SparkSession.getDefaultSession.isEmpty
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName(s"graft-ga-$mode")
-      .config("spark.sql.shuffle.partitions",
-        math.max(parts, 4).toString)
-      // reference op 21: setSpeculativeExecution(true)
-      // (/root/reference/src/edu/illinois/ga/MapReduce.java:281,
-      // CGA.java:339-341). A straggler task re-launches elsewhere — the
-      // GA loop is a barrier per generation, so one slow executor
-      // gates the whole iteration. No-op under local[*] (one JVM),
-      // effective on a real cluster manager.
-      .config("spark.speculation", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus(),
+      "spark.sql.shuffle.partitions" -> math.max(parts, 4).toString)
     try mode match {
       case "sga" | "inc" =>
         val n = args(2).toInt

@@ -57,8 +57,6 @@ object ScaleBench {
     val tbl = "sep_" + java.util.UUID.randomUUID.toString.take(8)
     spark.sql(s"CREATE TABLE $cat.$tbl " +
       "(doc_id BIGINT, lang STRING, n_chars BIGINT)")
-    // programmatic pin — this session runs without the SQL extension
-    // (the `ALTER TABLE ... CLUSTER BY` spelling needs it)
     if (pinned) vt.enableClustering(spark,
       spark.conf.get(s"spark.sql.catalog.$cat.warehouse") + "/" + tbl,
       Seq("doc_id")): Unit
@@ -1344,20 +1342,8 @@ object ScaleBench {
 
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: ScaleBench <sfDir> [<sfDir> ...]")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "2").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-scalebench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus())
 
     args.foreach { dir =>
       // warmup: touch every table so footer caches/JIT don't bill the

@@ -75,9 +75,4 @@ object PopCountArray {
   /** Column-API entry point. */
   def popcountArray(c: Column): Column =
     ColumnBridge.column(PopCountArray(ColumnBridge.expression(c)))
-
-  /** Register `popcount_array` for SQL use on a session. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "popcount_array", exprs => PopCountArray(exprs.head), "built-in")
 }

@@ -103,9 +103,4 @@ object SimHash64 {
   /** Column-API entry point. */
   def simhash64(c: Column): Column =
     ColumnBridge.column(SimHash64(ColumnBridge.expression(c)))
-
-  /** Register `simhash64` for SQL use on a session. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash64", exprs => SimHash64(exprs.head), "built-in")
 }

@@ -584,12 +584,4 @@ object VectorOps {
   def cosineSim(a: Column, b: Column): Column =
     ColumnBridge.column(CosineSim(
       ColumnBridge.expression(a), ColumnBridge.expression(b)))
-
-  /** Register both for SQL use on a session. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_product", exprs => DotProduct(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_sim", exprs => CosineSim(exprs(0), exprs(1)), "built-in")
-  }
 }

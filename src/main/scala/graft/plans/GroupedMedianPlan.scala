@@ -3,7 +3,7 @@ package graft.plans
 import scala.collection.mutable
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeReference, GenericInternalRow, SortOrder, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
@@ -34,9 +34,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * values pass through UNTOUCHED, so the result hash-matches q23/q27's
   * oracle — one ground truth, three physical strategies.
   *
-  * Registered via `GraftExtensions` (injectPlannerStrategy) or
-  * imperatively through `GroupedMedianPlan.exactMedian`, which adds
-  * the strategy to `spark.experimental.extraStrategies` on first use.
+  * Registered via `GraftExtensions` (injectPlannerStrategy), which
+  * every `graft.Session` carries.
   */
 case class ExactGroupedMedian(groupAttr: Attribute, valueAttr: Attribute,
     override val output: Seq[Attribute], child: LogicalPlan) extends UnaryNode {
@@ -313,11 +312,10 @@ object GroupedMedianPlan {
 
   /** (group, median, n) per group — `ops.GroupedMedian.exactMedian`
     * semantics, executed by the planner through [[GroupedMedianExec]].
-    * Adds [[GroupedMedianStrategy]] to the session's extra strategies
-    * on first use (a no-op when GraftExtensions already injected it). */
+    * Planning needs [[GroupedMedianStrategy]], which `GraftExtensions`
+    * injects. */
   def exactMedian(df: DataFrame, groupCol: String, valueCol: String): DataFrame = {
     val spark = df.sparkSession
-    register(spark)
     val child = org.apache.spark.sql.graft.PlanBridge.analyzed(df)
     def attr(n: String): Attribute = child.output.find(_.name == n).getOrElse(
       throw new IllegalArgumentException(
@@ -330,9 +328,4 @@ object GroupedMedianPlan {
     org.apache.spark.sql.graft.PlanBridge.ofRows(spark,
       ExactGroupedMedian(g, v, out, child))
   }
-
-  def register(spark: SparkSession): Unit =
-    if (!spark.experimental.extraStrategies.contains(GroupedMedianStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ GroupedMedianStrategy
 }

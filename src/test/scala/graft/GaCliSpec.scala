@@ -38,4 +38,13 @@ class GaCliSpec extends SparkSpec {
     assert(!spark.sparkContext.isStopped,
       "GaCli must not stop a session it did not create")
   }
+
+  test("the CLI leaves an embedding caller's session conf untouched") {
+    // the shared session runs 4 shuffle partitions; an 8-partition
+    // run must neither reset them for later suites nor stop the session
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
+    GaCli.main(Array("sga", "8", "64", "1", "0.5"))
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
+    assert(!spark.sparkContext.isStopped)
+  }
 }

@@ -4,32 +4,15 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
-/** Shared local session for Spark-backed suites. One session per JVM
-  * (getOrCreate), pinned shuffle partitions + UTC + nanosAsLong so
-  * suites see the same semantics as Verify/Bench. */
+/** Shared local session for Spark-backed suites: the engine session
+  * every main builds (`graft.Session`, extensions included) at 4 CPUs,
+  * one per JVM, so suites see the same semantics and optimizer rules
+  * as Verify/Bench. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   def sf(dir: String): String = s"/root/testdata/$dir"
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // storage-partitioned joins over bucket-pinned catalog tables
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.sql.parquet.aggregatePushdown", "true")
-      // the maintenance-statement parser (OPTIMIZE/VACUUM/RESTORE);
-      // delegates everything else, so it is invisible to normal SQL
-      .config("spark.sql.extensions",
-        "graft.sources.GraftSqlExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val session: SparkSession = Session.local(4)
 }

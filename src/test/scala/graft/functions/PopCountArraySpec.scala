@@ -61,7 +61,6 @@ class PopCountArraySpec extends SparkSpec {
   }
 
   test("SQL registration") {
-    PopCountArray.register(spark)
     df.createOrReplaceTempView("pc_test")
     val got = spark.sql("SELECT popcount_array(g) AS pc FROM pc_test")
       .collect().map(_.getLong(0))

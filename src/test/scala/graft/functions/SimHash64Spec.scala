@@ -44,7 +44,6 @@ class SimHash64Spec extends SparkSpec {
   }
 
   test("SQL registration") {
-    SimHash64.register(spark)
     val r = spark.sql(
       "SELECT simhash64(array('a','b')) = simhash64(array('a','b')) AS eq")
       .collect().head.getBoolean(0)

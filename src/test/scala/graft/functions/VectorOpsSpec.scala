@@ -100,11 +100,15 @@ class VectorOpsSpec extends SparkSpec {
   }
 
   test("SQL registration") {
-    VectorOps.register(spark)
     val r = spark.sql(
       "SELECT dot_product(array(CAST(1.0 AS DOUBLE), 2.0), array(CAST(3.0 AS DOUBLE), 4.0))")
       .collect().head.getDouble(0)
     assert(r == 11.0)
+    // a missing argument is the arity message, not an index error
+    val err = intercept[Exception](spark.sql("SELECT dot_product(array(1.0))").collect())
+    val msgs = Iterator.iterate(err: Throwable)(_.getCause).takeWhile(_ != null)
+      .map(_.getMessage).mkString(" | ")
+    assert(msgs.contains("dot_product(array<float>, array<float>)"), msgs)
   }
 
   test("hyperplaneBuckets is bit-identical to the per-(table,plane) " +

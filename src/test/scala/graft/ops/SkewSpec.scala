@@ -97,16 +97,8 @@ class SkewSpec extends SparkSpec {
   }
 
   test("GraftExtensions registers the native functions for plain SQL") {
-    // simulate an extensions-configured session on the shared one
-    new graft.GraftExtensions().apply(
-      new org.apache.spark.sql.SparkSessionExtensions {})
-    // register the REAL builders (the ones GraftExtensions injects)
-    // into the shared session's registry, so the SQL below exercises
-    // the production arity/argument handling
-    graft.GraftExtensions.sqlFunctions.foreach { case (name, _, builder) =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        name, builder, "built-in")
-    }
+    // the shared session is the engine session: the SQL below runs the
+    // builders GraftExtensions injects, with their arity handling
     val got = spark.sql("SELECT popcount_array(array(CAST(7 AS BIGINT))) AS pc")
       .collect().head.getLong(0)
     assert(got == 3L)

@@ -68,7 +68,6 @@ class GroupedMedianPlanSpec extends SparkSpec {
   }
 
   test("the declarative rank spelling plans as GroupedMedianExec with one exchange") {
-    GroupedMedianPlan.register(spark)
     val rng = new scala.util.Random(11)
     val df = (0 until 4000)
       .map(_ => (s"g${rng.nextInt(3)}", rng.nextInt(500) * 0.25))
@@ -83,10 +82,19 @@ class GroupedMedianPlanSpec extends SparkSpec {
     val got = canon(decl)
     val want = canon(GroupedMedian.exactMedian(df, "grp", "v"))
     assert(got == want)
+    // and with the rewrite switched off, Spark's own window plan agrees
+    spark.conf.set("spark.graft.medianRewrite.enabled", "false")
+    val viaWindows = try {
+      val plain = declarativeMedian(df)
+      plain.collect()
+      val pp = plain.queryExecution.executedPlan.toString
+      assert(pp.contains("Window") && !pp.contains("GroupedMedian "), pp.take(1500))
+      canon(plain)
+    } finally spark.conf.unset("spark.graft.medianRewrite.enabled")
+    assert(got == viaWindows)
   }
 
   test("near-miss shapes fall through to the built-in planner") {
-    GroupedMedianPlan.register(spark)
     import org.apache.spark.sql.expressions.Window
     val df = Seq(("a", 1.0), ("a", 2.0), ("b", 3.0)).toDF("grp", "v")
     val w = Window.partitionBy("grp").orderBy("v")

@@ -9,11 +9,15 @@ class RangeJoinRewriteSpec extends SparkSpec {
 
   import SparkSpec.session.implicits._
 
-  private def withRule[A](f: => A): A = {
-    val prev = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = prev :+ RangeJoinRewrite()
-    try f finally spark.experimental.extraOptimizations = prev
+  /** The shared session carries the rule (GraftExtensions); its own
+    * switch turns it on for the rewritten side and off for the naive
+    * reference side, so every comparison is rule vs. planner. */
+  private def ruleSwitched[A](on: Boolean)(f: => A): A = {
+    spark.conf.set("spark.graft.rangeJoin.enabled", on.toString)
+    try f finally spark.conf.unset("spark.graft.rangeJoin.enabled")
   }
+  private def withRule[A](f: => A): A = ruleSwitched(on = true)(f)
+  private def ruleOff[A](f: => A): A = ruleSwitched(on = false)(f)
 
   private def rangeJoinDf: DataFrame = {
     val cust = Tables.customer(spark, sf("sf0.001"))
@@ -40,7 +44,7 @@ class RangeJoinRewriteSpec extends SparkSpec {
   test("rewritten results equal the nested-loop results exactly") {
     def canon(df: DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    val naive = canon(rangeJoinDf)
+    val naive = ruleOff(canon(rangeJoinDf))
     val rewritten = withRule(canon(rangeJoinDf))
     assert(naive.nonEmpty && rewritten == naive)
   }
@@ -78,7 +82,7 @@ class RangeJoinRewriteSpec extends SparkSpec {
     def q() = pts.join(ivs, col("v") > col("lo") && col("v") < col("hi"))
       .select("pid", "iid").collect().map(r => (r.getLong(0), r.getLong(1)))
       .sorted.toSeq
-    val naive = q()
+    val naive = ruleOff(q())
     val rewritten = withRule {
       val df = pts.join(ivs, col("v") > col("lo") && col("v") < col("hi"))
       assert(df.queryExecution.optimizedPlan.toString.contains("__graft_bin"))
@@ -96,7 +100,7 @@ class RangeJoinRewriteSpec extends SparkSpec {
     def q() = pts.join(ivs, col("v") >= col("lo") && col("v") <= col("hi"))
       .select("pid", "iid").collect().map(r => (r.getLong(0), r.getLong(1)))
       .sorted.toSeq
-    val naive = q()
+    val naive = ruleOff(q())
     val rewritten = withRule {
       val df = pts.join(ivs, col("v") >= col("lo") && col("v") <= col("hi"))
       assert(df.queryExecution.optimizedPlan.toString.contains("__graft_bin"))
@@ -134,7 +138,7 @@ class RangeJoinRewriteSpec extends SparkSpec {
           col("v") >= col("lo") && col("v") <= col("hi"))
         .select("pid", "iid").collect().map(r => (r.getLong(0), r.getLong(1)))
         .sorted.toSeq
-      val naive = q()
+      val naive = ruleOff(q())
       val w = Seq("3.0", "50.0", "400.0")(round)
       spark.conf.set("spark.graft.rangeJoin.binWidth", w)
       val rewritten = try withRule(q())
@@ -201,7 +205,7 @@ class RangeJoinRewriteSpec extends SparkSpec {
     def q() = pts.join(ivs, col("v") >= col("lo") && col("v") <= col("hi"))
       .select("pid", "iid").collect().map(r => (r.getLong(0), r.getLong(1)))
       .sorted.toSeq
-    val naive = q()
+    val naive = ruleOff(q())
     val rewritten = withRule(q())
     assert(naive == Seq((1L, 11L)) && rewritten == naive)
   }
@@ -213,7 +217,7 @@ class RangeJoinRewriteSpec extends SparkSpec {
     val pts = Seq((1L, 500.0)).toDF("pid", "v")
     val ivs = Seq((10L, 5.0, Double.NaN)).toDF("iid", "lo", "hi")
     val cond = col("v") >= col("lo") && col("v") <= col("hi")
-    assert(pts.join(ivs, cond).count() == 1) // naive: NaN hi matches
+    assert(ruleOff(pts.join(ivs, cond).count()) == 1) // naive: NaN hi matches
     val e = withRule {
       intercept[Exception] { pts.join(ivs, cond).count() }
     }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.graft.PlanBridge
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.Filter
-import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2Relation, DataSourceV2ScanRelation}
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
 import org.apache.spark.sql.functions._
 
@@ -127,11 +127,19 @@ class DataSkippingSpec extends SparkSpec {
       assert(tables.size == 1)
       val pt = tables.head.asInstanceOf[ParquetTable]
       assert(pt.paths.size == 1, s"expected 1 surviving file: ${pt.paths}")
-      // the rewritten plan still answers identically
+      // the rewritten plan still answers identically; the plain side
+      // runs with the session's injected copy of the rule excluded
       val viaRule = PlanBridge.ofRows(spark, rewritten)
         .collect().map(_.toSeq).toSet
-      val plain = df.collect().map(_.toSeq).toSet
+      val excluded = "spark.sql.optimizer.excludedRules"
+      spark.conf.set(excluded, classOf[graft.plans.VersionedSkipRule].getName)
+      val plain = try df.collect().map(_.toSeq).toSet
+        finally spark.conf.unset(excluded)
       assert(viaRule == plain)
+      assert(df.queryExecution.optimizedPlan.collect {
+        case s: DataSourceV2ScanRelation =>
+          s.relation.options.containsKey("__graft_skip_applied")
+      } == Seq(false), "the plain side must scan every file")
       // marked relations are left alone (fixed-point safety)
       assert(plans().apply(rewritten).collect {
         case r: DataSourceV2Relation => r.table
