@@ -53,12 +53,9 @@ object GaCli {
         val pop = GaConfig.populationSize(n, popMult)
         val cfg = GaConfig(nBits = n, popSize = pop, numPartitions = parts,
           maxGenerations = iters, dedupOffspring = mode == "inc")
-        val r = resumeDir match {
-          case Some(root) => Sga.runLoopDurable(spark, cfg, root)
-          case None => Sga.runLoop(spark, cfg, (gen, best, ms) =>
-            // reference log line: GA:<it>:<n>:<pop>:<best>:<millis>
-            println(s"GA:$gen:$n:$pop:$best:$ms"))
-        }
+        val r = Sga.runLoop(spark, cfg, (gen, best, ms) =>
+          // reference log line: GA:<it>:<n>:<pop>:<best>:<millis>
+          println(s"GA:$gen:$n:$pop:$best:$ms"), durableRoot = resumeDir)
         println(s"SGA done: best=${r.bestFitness}/${cfg.nBits} " +
           s"generations=${r.generations} converged=${cfg.converged(r.bestFitness)}")
       case "cga" =>

@@ -165,16 +165,15 @@ object Cga {
     (w, l)
   }
 
-  /** Reference op 19 (CGA.java:262-309): per bit where winner and loser
-    * disagree, nudge p by ±delta toward the winner; p clamped to [0,1]
-    * (the reference lets its fixed-point cells drift past the
-    * representable range — clamping is the well-defined spelling of the
-    * same sampling behavior). Returns updated splits and the count of
-    * cells still in the unconverged band [lLimit, uLimit] (op 20's
-    * per-task side write + driver sum, :310-324,443-496).
-    * Narrow map — candidates are already co-located with their split. */
-  /** The update kernel for one split (shared by the Dataset operator
-    * and the RDD iteration core). */
+  /** Reference op 19 (CGA.java:262-309), the update kernel for one
+    * split, shared by `update` and the RDD iteration core: per bit where
+    * winner and loser disagree, nudge p by ±delta toward the winner; p
+    * clamped to [0,1] (the reference lets its fixed-point cells drift
+    * past the representable range — clamping is the well-defined
+    * spelling of the same sampling behavior). Returns the updated split
+    * and its count of cells still in the unconverged band
+    * [lLimit, uLimit] (op 20's per-task side write + driver sum,
+    * :310-324,443-496). */
   private def updateSplit(ss: SampledSplit, winner: Int, loser: Int,
       delta: Double, lLim: Double, uLim: Double): (VectorSplit, Long) = {
     val w = ss.candidates(winner)
@@ -195,6 +194,8 @@ object Cga {
     (VectorSplit(ss.splitId, probs), unConverged)
   }
 
+  /** Reference op 19 over the Dataset: a narrow map, since the
+    * candidates are already co-located with their split. */
   def update(sampled: Dataset[SampledSplit], winner: Int, loser: Int,
       cfg: CgaConfig): Dataset[(VectorSplit, Long)] = {
     import sampled.sparkSession.implicits._

@@ -2,10 +2,16 @@ package graft.sga
 
 import java.util.Random
 
-import org.apache.spark.TaskContext
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import scala.collection.mutable.ArrayBuffer
+import scala.util.chaining._
+
+import org.apache.hadoop.fs.Path
+import org.apache.spark.{Partitioner, TaskContext}
+import org.apache.spark.rdd.{RDD, ShuffledRDD}
+import org.apache.spark.sql.{Column, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Literal, Murmur3HashFunction, Rand}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.sql.types.DoubleType
 
 import graft.core.{GaConfig, Genome, Individual, Tournament}
 
@@ -20,19 +26,13 @@ class BestAccumulator
   private var bestG: Array[Long] = null
   private var bestF: Long = Long.MinValue
   override def isZero: Boolean = bestG == null
-  override def copy(): BestAccumulator = {
-    val c = new BestAccumulator
-    c.bestG = bestG; c.bestF = bestF
-    c
-  }
+  override def copy(): BestAccumulator = new BestAccumulator().tap(_.add(value))
   override def reset(): Unit = { bestG = null; bestF = Long.MinValue }
   override def add(v: (Array[Long], Long)): Unit =
     if (bestG == null || v._2 > bestF) { bestG = v._1; bestF = v._2 }
   override def merge(
-      other: org.apache.spark.util.AccumulatorV2[(Array[Long], Long), (Array[Long], Long)]): Unit = {
-    val (g, f) = other.value
-    if (g != null) add((g, f))
-  }
+      other: org.apache.spark.util.AccumulatorV2[(Array[Long], Long), (Array[Long], Long)]): Unit =
+    if (other.value._1 != null) add(other.value)
   override def value: (Array[Long], Long) = (bestG, bestF)
 }
 
@@ -43,18 +43,19 @@ case class SgaResult(
     generations: Int,
     history: Seq[Long])
 
-/** Simple genetic algorithm (ONEMAX) as a library of pure
-  * Dataset→Dataset stages over Spark SQL — the Spark-first
-  * re-expression of /root/reference/src/edu/illinois/ga/MapReduce.java
-  * (see SURVEY.md §2.1 ops 1-13 for the op-by-op mapping).
+/** Simple genetic algorithm (ONEMAX), the Spark-first re-expression of
+  * the reference's MapReduce.java (SURVEY.md §2.1 ops 1-13).
   *
-  * Scale posture: one shuffle per generation (the mixing step — the
-  * only shuffle the algorithm semantically needs), fitness evaluation
-  * and partial argmax fully inside whole-stage codegen, selection +
-  * crossover in a single narrow `mapPartitions`, and a
-  * `localCheckpoint` per generation to cut the iterative lineage
-  * (the reference paid a full HDFS write/read round-trip per
-  * generation for the same purpose, MapReduce.java:298-302).
+  * The Dataset operators (`initPopulation` ... `step`) are the
+  * declarative spelling: one shuffle per generation (the mixing step),
+  * fitness in whole-stage codegen, selection + crossover in one narrow
+  * `mapPartitions`. `runLoop` drives generations on an RDD core with the
+  * same trajectory (SgaSpec pins it): a map draws the mixing key, a
+  * `ShuffledRDD` reproduces `mix`'s permutation, a map selects, crosses,
+  * evaluates and feeds the best to an accumulator, and materialization
+  * (local checkpoint or parquet write) is the only action. That is one
+  * Spark job per generation with no Catalyst planning in the in-memory
+  * loop, where the reference paid a Hadoop job (MapReduce.java:281-302).
   */
 object Sga {
 
@@ -65,13 +66,6 @@ object Sga {
     */
   def fitnessExpr(genome: Column): Column =
     graft.functions.PopCountArray.popcountArray(genome)
-
-  /** The equivalent built-ins-only spelling (bit_count inside
-    * transform + aggregate); kept as the cross-check for tests. */
-  def fitnessExprBuiltin(genome: Column): Column =
-    aggregate(
-      transform(genome, w => bit_count(w).cast("long")),
-      lit(0L), (acc, x) => acc + x)
 
   /** Reference op 2: seeded parallel population init. `spark.range`
     * replaces the reference's seed-file fan-out trick (op 1,
@@ -147,123 +141,127 @@ object Sga {
     evaluate(next)
   }
 
-  /** Reference op 11: the generation loop. localCheckpoint each
-    * generation truncates lineage (and is the only materialization —
-    * vs the reference's per-generation HDFS round trip). Stops on
-    * convergence (best >= n - slack) or maxGenerations. */
-  /** selectAndCross with fitness evaluation fused into the same
-    * mapPartitions and the global argmax tracked by `acc` as rows
-    * stream by. Values are identical to selectAndCross→evaluate→best
-    * (popcount is pure; the accumulator is an idempotent max, safe
-    * under task retries/speculation) — but the per-generation plan
-    * loses one full-population aggregate job: the checkpoint
-    * materialization is the ONLY action, and the best individual
-    * rides home on the accumulator instead of a second 2 GB cache
-    * scan (measured win at the reference's README:41 headline scale). */
-  def selectCrossEvaluate(pop: Dataset[Individual], cfg: GaConfig,
-      generation: Int, acc: BestAccumulator): Dataset[Individual] = {
-    import pop.sparkSession.implicits._
-    val s = cfg.tournamentSize
-    val seed = cfg.seed
-    pop.mapPartitions { it =>
-      val rng = new Random(seed * 7919L + generation * 104729L +
-        TaskContext.getPartitionId())
-      Tournament.selectAndCross(it, s, rng).map { ind =>
-        val f = Genome.popcount(ind.genome)
-        acc.add((ind.genome, f))
-        Individual(ind.genome, f)
-      }
-    }
-  }
-
-  def runLoop(spark: SparkSession, cfg: GaConfig,
-      onGeneration: (Int, Long, Long) => Unit = (_, _, _) => ()): SgaResult = {
-    var pop = evaluate(initPopulation(spark, cfg))
-      .persist(StorageLevel.MEMORY_AND_DISK).localCheckpoint()
-    var gen = 0
-    val history = scala.collection.mutable.ArrayBuffer[Long]()
-    var (bg, bf) = best(pop)
-    history += bf
-    while (!cfg.converged(bf) && gen < cfg.maxGenerations) {
-      val t0 = System.nanoTime()
-      val acc = new BestAccumulator
-      spark.sparkContext.register(acc, s"sga_best_gen_${gen + 1}")
-      val crossed = selectCrossEvaluate(mix(pop, cfg, gen), cfg, gen, acc)
-      val deduped = if (cfg.dedupOffspring) crossed.dropDuplicates("genome")
-        else crossed
-      val next = deduped.localCheckpoint() // the generation's ONE action
-      pop.unpersist(blocking = false)
-      pop = next
-      gen += 1
-      val r = acc.value
-      bg = r._1; bf = r._2
-      history += bf
-      onGeneration(gen, bf, (System.nanoTime() - t0) / 1000000L)
-    }
-    pop.unpersist(blocking = false)
-    SgaResult(bg, bf, gen, history.toSeq)
-  }
-
-  // ---- durable generations (reference ops 13 + 22: per-generation
-  // materialization as Parquet instead of SequenceFiles, with
-  // resume-from-latest continuation) ----
+  // ---- durable generations (reference ops 13 + 22): Parquet instead
+  // of SequenceFiles, resumed from the latest one ----
 
   /** Write one generation durably (op 13's per-iteration sink). */
   def saveGeneration(pop: Dataset[Individual], root: String, gen: Int): Unit =
     pop.write.mode("overwrite").parquet(s"$root/gen=$gen")
 
-  /** Read a generation back. */
+  /** Read a generation back, its part files named in sorted order: the
+    * read layout (and so each partition's mixing-key stream) depends on
+    * the files alone, not on the order a directory listing returns. */
   def loadGeneration(spark: SparkSession, root: String, gen: Int): Dataset[Individual] = {
     import spark.implicits._
-    spark.read.parquet(s"$root/gen=$gen").as[Individual]
+    val dir = new Path(s"$root/gen=$gen")
+    val files = dir.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(dir)
+      .map(_.getPath).filterNot(p => "_.".contains(p.getName.head)).map(_.toString)
+    spark.read.parquet(files.sorted.toIndexedSeq: _*).as[Individual]
   }
 
   /** Latest persisted generation id under `root`, if any. */
   def latestGeneration(spark: SparkSession, root: String): Option[Int] = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(root), spark.sparkContext.hadoopConfiguration)
-    val p = new org.apache.hadoop.fs.Path(root)
+    val p = new Path(root)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) None
-    else fs.listStatus(p).toSeq
-      .map(_.getPath.getName)
-      .collect { case s if s.startsWith("gen=") => s.drop(4).toInt }
-      .maxOption
+    else fs.listStatus(p).map(_.getPath.getName)
+      .collect { case s if s.startsWith("gen=") => s.drop(4).toInt }.maxOption
   }
 
-  /** The loop with durable generations: every generation lands in
-    * `root/gen=k` Parquet, and a rerun resumes from the latest one
-    * (reference op 22's `iter` CLI continuation, CGA.java:503-519).
-    *
-    * Every generation steps from the RELOADED parquet form — the same
-    * discipline as the reference's per-iteration HDFS round trip.
-    * This is what makes resume EXACT: the rand-keyed mixing shuffle
-    * reads physical layout (per-partition rand streams), so stepping
-    * from in-memory state here would put an uninterrupted run on a
-    * different trajectory than a crash-and-resume one. With the
-    * round trip, both see byte-identical inputs generation for
-    * generation (GaCliSpec asserts the multiset equality). The write
-    * itself is the loop's materialization point — no extra
-    * localCheckpoint needed, and lineage stays one-generation deep. */
-  def runLoopDurable(spark: SparkSession, cfg: GaConfig, root: String): SgaResult = {
-    val startGen = latestGeneration(spark, root) match {
-      case Some(g) => g
-      case None =>
-        saveGeneration(evaluate(initPopulation(spark, cfg)), root, 0)
-        0
-    }
-    var gen = startGen
-    var pop = evaluate(loadGeneration(spark, root, gen))
-    val history = scala.collection.mutable.ArrayBuffer[Long]()
-    var (bg, bf) = best(pop)
-    history += bf
-    while (!cfg.converged(bf) && gen < cfg.maxGenerations) {
-      saveGeneration(step(pop, cfg, gen), root, gen + 1)
-      gen += 1
-      pop = evaluate(loadGeneration(spark, root, gen))
-      val r = best(pop)
-      bg = r._1; bf = r._2
-      history += bf
-    }
-    SgaResult(bg, bf, gen, history.toSeq)
+  /** Reference op 11, the generation loop, until best >= n - slack or
+    * `maxGenerations`; `onGeneration(gen, best, millis)` is the
+    * reference's `GA:<it>:<n>:<pop>:<best>:<millis>` record. In memory,
+    * each generation is local-checkpointed and the one before released.
+    * With `durableRoot`, each lands in `root/gen=k` and the next steps
+    * from the RELOADED files (the reference's HDFS round trip): as the
+    * mixing key depends on the layout, that makes a resumed run
+    * (from the latest generation) equal an uninterrupted one. */
+  def runLoop(spark: SparkSession, cfg: GaConfig,
+      onGeneration: (Int, Long, Long) => Unit = (_, _, _) => (),
+      durableRoot: Option[String] = None): SgaResult = {
+    val (result, last) = generations(spark, cfg, onGeneration, durableRoot)
+    last.unpersist(blocking = true)
+    result
   }
+
+  /** `runLoop`, also returning its last generation, still materialized. */
+  private[sga] def generations(spark: SparkSession, cfg: GaConfig,
+      onGeneration: (Int, Long, Long) => Unit,
+      durableRoot: Option[String]): (SgaResult, RDD[Individual]) = {
+    import spark.implicits._
+    def bestOf(gen: Int) =
+      new BestAccumulator().tap(spark.sparkContext.register(_, s"sga_best_gen_$gen"))
+    // the generation's one action; the files keep `evaluate`'s schema
+    def materialize(pop: RDD[Individual], gen: Int): RDD[Individual] = durableRoot match {
+      case Some(root) =>
+        saveGeneration(evaluate(spark.createDataset(pop)), root, gen)
+        loadGeneration(spark, root, gen).rdd
+      case None => pop.localCheckpoint(); pop.count(); pop
+    }
+    val first = bestOf(0)
+    val resumeFrom = durableRoot.flatMap(latestGeneration(spark, _))
+    var pop = resumeFrom match {
+      case Some(g) =>
+        val saved = loadGeneration(spark, durableRoot.get, g).rdd
+        saved.mapPartitions(scored(_, first)).foreach(_ => ())
+        saved
+      case None => materialize(initPopulation(spark, cfg).rdd.mapPartitions(scored(_, first)), 0)
+    }
+    var gen = resumeFrom.getOrElse(0)
+    var fittest = first.value
+    val history = ArrayBuffer(fittest._2)
+    while (!cfg.converged(fittest._2) && gen < cfg.maxGenerations) {
+      val t0 = System.nanoTime()
+      val acc = bestOf(gen + 1)
+      val bred = breed(pop, cfg, gen, acc)
+      // reference op 14: the incremental variant's offspring dedup
+      val next = materialize(if (!cfg.dedupOffspring) bred
+        else spark.createDataset(bred).dropDuplicates("genome").rdd, gen + 1)
+      pop.unpersist(blocking = false)
+      pop = next
+      gen += 1
+      fittest = acc.value
+      history += fittest._2
+      onGeneration(gen, fittest._2, (System.nanoTime() - t0) / 1000000L)
+    }
+    (SgaResult(fittest._1, fittest._2, gen, history.toSeq), pop)
+  }
+
+  /** One generation, ops 7-10 + 3, with `mix`'s permutation and
+    * `selectAndCross`'s draws: the key is catalyst's own `Rand`, seeded
+    * as in `mix` and initialized with the partition index, and the
+    * exchange routes it as Spark SQL's hash partitioning does and sorts
+    * each partition by it. A (double, long array) record lets Spark pick
+    * Kryo for the shuffle; fitness is recomputed after it. */
+  private def breed(pop: RDD[Individual], cfg: GaConfig, gen: Int,
+      acc: BestAccumulator): RDD[Individual] = {
+    val (mixSeed, seed, s) = (cfg.seed * 1000003L + gen, cfg.seed, cfg.tournamentSize)
+    val keyed = pop.mapPartitionsWithIndex { (p, it) =>
+      val key = Rand(Literal(mixSeed))
+      key.initialize(p)
+      it.map(ind => (key.eval().asInstanceOf[Double], ind.genome))
+    }
+    new ShuffledRDD[Double, Array[Long], Array[Long]](keyed, new MixPartitioner(cfg.numPartitions))
+      .setKeyOrdering(Ordering.Double.TotalOrdering)
+      .mapPartitionsWithIndex { (p, it) =>
+        val rng = new Random(seed * 7919L + gen * 104729L + p)
+        val parents = it.map { case (_, g) => Individual(g, Genome.popcount(g)) }
+        scored(Tournament.selectAndCross(parents, s, rng), acc)
+      }
+  }
+
+  /** ONEMAX-scores each individual (op 3) and offers it to `acc`. */
+  private def scored(it: Iterator[Individual], acc: BestAccumulator): Iterator[Individual] =
+    it.map { ind =>
+      val f = Genome.popcount(ind.genome)
+      acc.add((ind.genome, f))
+      Individual(ind.genome, f)
+    }
+}
+
+/** Spark SQL's `HashPartitioning` of one double column: pmod of its
+  * seed-42 Murmur3 hash. */
+private class MixPartitioner(override val numPartitions: Int) extends Partitioner {
+  override def getPartition(key: Any): Int =
+    Math.floorMod(Murmur3HashFunction.hash(key, DoubleType, 42L).toInt, numPartitions)
 }

@@ -33,6 +33,22 @@ class GaCliSpec extends SparkSpec {
     assert(genomes(interrupted, 4) == genomes(straight, 4))
   }
 
+  test("sga CLI prints one GA record per generation in resume mode") {
+    val root = tmpDir()
+    // the generation numbers of the GA:<it>:<n>:<pop>:<best>:<millis> lines
+    def records(args: String*): Seq[Int] = {
+      val out = new java.io.ByteArrayOutputStream()
+      Console.withOut(out)(GaCli.main(args.toArray))
+      out.toString.linesIterator.filter(_.startsWith("GA:")).map { line =>
+        val f = line.split(":")
+        assert(f.length == 6 && f(2) == "128", line)
+        f(1).toInt
+      }.toSeq
+    }
+    assert(records("sga", "2", "128", "2", "0.5", root) == Seq(1, 2))
+    assert(records("sga", "2", "128", "4", "0.5", root) == Seq(3, 4))
+  }
+
   test("the CLI leaves an embedding caller's session running") {
     GaCli.main(Array("sga", "2", "64", "1", "0.5"))
     assert(!spark.sparkContext.isStopped,

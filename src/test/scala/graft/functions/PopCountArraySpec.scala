@@ -43,7 +43,10 @@ class PopCountArraySpec extends SparkSpec {
     val rng = new java.util.Random(7)
     val pop = Seq.fill(200)(Tuple1(Genome.random(300, rng))).toDF("g")
     val a = pop.select(PopCountArray.popcountArray(col("g"))).collect().map(_.getLong(0))
-    val b = pop.select(graft.sga.Sga.fitnessExprBuiltin(col("g"))).collect().map(_.getLong(0))
+    // bit_count inside transform + aggregate
+    val builtin = aggregate(transform(col("g"), w => bit_count(w).cast("long")),
+      lit(0L), (acc, x) => acc + x)
+    val b = pop.select(builtin).collect().map(_.getLong(0))
     assert(a.toSeq == b.toSeq)
   }
 

@@ -26,11 +26,11 @@ class DurableSpec extends SparkSpec {
     val root = tmpDir()
     val cfg = GaConfig(nBits = 64, popSize = 512, numPartitions = 2,
       seed = 42, maxGenerations = 3, convergenceSlack = -1)
-    val r1 = Sga.runLoopDurable(spark, cfg, root)
+    val r1 = Sga.runLoop(spark, cfg, durableRoot = Some(root))
     assert(r1.generations == 3)
     assert(Sga.latestGeneration(spark, root).contains(3))
     // resume with a higher budget: continues from gen 3, not from 0
-    val r2 = Sga.runLoopDurable(spark, cfg.copy(maxGenerations = 5), root)
+    val r2 = Sga.runLoop(spark, cfg.copy(maxGenerations = 5), durableRoot = Some(root))
     assert(r2.generations == 5)
     assert(Sga.latestGeneration(spark, root).contains(5))
     // the resumed population is the saved one (evaluate is idempotent)

@@ -1,7 +1,16 @@
 package graft.sga
 
+import java.nio.file.Files
+
+import scala.collection.mutable.ArrayBuffer
+import scala.math.Ordering.Implicits.seqOrdering
+
+import org.apache.spark.storage.StorageLevel
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.SpanSugar._
+
 import graft.SparkSpec
-import graft.core.{GaConfig, Genome}
+import graft.core.{GaConfig, Genome, Individual}
 
 class SgaSpec extends SparkSpec {
 
@@ -84,5 +93,91 @@ class SgaSpec extends SparkSpec {
     assert(Genome.popcount(r.bestGenome) == r.bestFitness)
     // best-so-far is nondecreasing in expectation; assert the endpoints
     assert(r.history.last >= r.history.head)
+  }
+
+  // configs for the loop-equivalence cases: an odd population, genome
+  // widths off a 64-bit word, 3 and 5 partitions, tournament sizes 3
+  // and 4, and partitions smaller than the window (64 rows over 8)
+  private val loopCfgs = Seq(
+    GaConfig(nBits = 100, popSize = 777, tournamentSize = 3, numPartitions = 3,
+      seed = 7, maxGenerations = 5, convergenceSlack = -1),
+    cfg,
+    GaConfig(nBits = 130, popSize = 501, tournamentSize = 4, numPartitions = 5,
+      seed = 11, maxGenerations = 4, convergenceSlack = -1),
+    GaConfig(nBits = 64, popSize = 64, tournamentSize = 5, numPartitions = 8,
+      seed = 3, maxGenerations = 3, convergenceSlack = -1))
+
+  private def multiset(pop: Array[Individual]): Seq[(Seq[Long], Long)] =
+    pop.map(i => (i.genome.toSeq, i.fitness)).toSeq.sorted
+
+  test("the RDD loop core computes the same trajectory as the Dataset operators") {
+    loopCfgs.foreach { c =>
+      // the Dataset spelling: step + best, each generation local-checkpointed
+      var pop = Sga.evaluate(Sga.initPopulation(spark, c)).localCheckpoint()
+      val history = ArrayBuffer(Sga.best(pop)._2)
+      var gen = 0
+      while (!c.converged(history.last) && gen < c.maxGenerations) {
+        pop = Sga.step(pop, c, gen).localCheckpoint()
+        gen += 1
+        history += Sga.best(pop)._2
+      }
+      // runLoop's body, which also hands back its last generation
+      val (r, last) = Sga.generations(spark, c, (_, _, _) => (), None)
+      assert(r.history == history.toSeq, s"history diverged for $c")
+      assert(r.generations == gen)
+      assert(multiset(last.collect()) == multiset(pop.collect()),
+        s"final population diverged for $c")
+      last.unpersist(blocking = true)
+    }
+  }
+
+  test("the durable loop saves the generations of a step-from-reloaded-parquet run") {
+    loopCfgs.take(3).foreach { c =>
+      val ref = Files.createTempDirectory("graft-sga-ref").toString
+      val root = Files.createTempDirectory("graft-sga-loop").toString
+      def reloaded(dir: String, g: Int) = Sga.evaluate(Sga.loadGeneration(spark, dir, g))
+      Sga.saveGeneration(Sga.evaluate(Sga.initPopulation(spark, c)), ref, 0)
+      val history = ArrayBuffer(Sga.best(reloaded(ref, 0))._2)
+      var gen = 0
+      while (!c.converged(history.last) && gen < c.maxGenerations) {
+        Sga.saveGeneration(Sga.step(reloaded(ref, gen), c, gen), ref, gen + 1)
+        gen += 1
+        history += Sga.best(reloaded(ref, gen))._2
+      }
+      val r = Sga.runLoop(spark, c, durableRoot = Some(root))
+      assert(r.history == history.toSeq, s"history diverged for $c")
+      (0 to gen).foreach { g =>
+        assert(multiset(reloaded(root, g).collect()) == multiset(reloaded(ref, g).collect()),
+          s"generation $g diverged for $c")
+      }
+    }
+  }
+
+  test("runLoop runs one Spark job per generation, plus one for generation 0") {
+    val sc = spark.sparkContext
+    val c = cfg.copy(maxGenerations = 3, convergenceSlack = -1)
+    val group = s"sga-job-count-${System.nanoTime()}"
+    sc.setJobGroup(group, "SGA job count")
+    try Sga.runLoop(spark, c) finally sc.clearJobGroup()
+    eventually(timeout(10.seconds), interval(100.millis)) {
+      assert(sc.statusTracker.getJobIdsForGroup(group).length == 1 + c.maxGenerations)
+    }
+  }
+
+  test("runLoop leaves no cached data behind (in memory, durable and dedup)") {
+    val sc = spark.sparkContext
+    val c = GaConfig(nBits = 64, popSize = 2048, numPartitions = 4, seed = 9,
+      maxGenerations = 3, convergenceSlack = -1)
+    def cachedRdds: Set[Int] = sc.getRDDStorageInfo.map(_.id).toSet
+    val before = cachedRdds
+    Sga.runLoop(spark, c)
+    Sga.runLoop(spark, c, durableRoot =
+      Some(Files.createTempDirectory("graft-sga-cache").toString))
+    Sga.runLoop(spark, c.copy(nBits = 8, dedupOffspring = true))
+    // the generation-0 plan a loop could cache through the CacheManager
+    assert(Sga.evaluate(Sga.initPopulation(spark, c)).storageLevel == StorageLevel.NONE)
+    eventually(timeout(10.seconds), interval(100.millis)) {
+      assert((cachedRdds -- before).isEmpty, "runLoop left cached RDDs behind")
+    }
   }
 }
