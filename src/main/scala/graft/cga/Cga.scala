@@ -259,9 +259,12 @@ object Cga {
       durableRoot: Option[String] = None, saveEvery: Int = 10): CgaResult = {
     import spark.implicits._
     val sc = spark.sparkContext
-    val resumed = durableRoot.flatMap(r =>
-      latestIteration(spark, r).map(i => (loadVector(spark, r, i).rdd, i)))
     val parts = math.min(cfg.numSplits, sc.defaultParallelism)
+    // a resumed vector takes the uninterrupted run's layout, the splits
+    // in id order sliced as `sc.range` slices them: the draws are keyed
+    // by partition, and a parquet read places its files by size
+    val resumed = durableRoot.flatMap(r => latestIteration(spark, r).map(i =>
+      (sc.parallelize(loadVector(spark, r, i).collect().sortBy(_.splitId).toSeq, parts), i)))
     val bits = cfg.splitBits
     // state rows carry (split, unconvergedCellsFromProducingUpdate);
     // init/resumed rows carry the -1 sentinel (unknown — never

@@ -52,31 +52,16 @@ object TextFunctions {
   def wordShingles(text: Column, n: Int): Column =
     shinglesOfTokens(tokens(text), n)
 
-  /** Exact Jaccard similarity of two distinct-element arrays. NULL for
-    * two empty sets (try_divide — same ANSI-safe discipline as
-    * cosine/qualityScores; callers may pass pre-tokenized empties).
-    * The intersection is built once and threaded through a zero-arg
-    * zip_with binding so the (expensive) array_intersect isn't
-    * evaluated twice per pair. */
-  def jaccard(a: Column, b: Column): Column = {
-    // bind |a ∩ b| to a lambda variable: transform over a 1-element
-    // array gives us a cheap "let" without computing the intersect twice
-    val inter = size(array_intersect(a, b)).cast("double")
-    element_at(
-      transform(array(inter),
-        i => try_divide(i, size(a) + size(b) - i)),
-      1)
-  }
-
-  /** [[jaccard]] over arrays that are each SORTED ascending with
-    * distinct elements (build them with [[tokenSetSorted]] /
-    * `array_sort(shinglesOfTokens(...))`): identical values — the
-    * intersection size is the same integer, the division the same
-    * fp op — via the allocation-free two-pointer kernel
-    * ([[graft.functions.SortedIntersectSize]]) instead of
-    * `array_intersect`'s per-pair hash set + discarded result array.
-    * This is the per-candidate-pair verify kernel of the dedup
-    * family; SetOpsSpec pins value parity with [[jaccard]]. */
+  /** Exact Jaccard similarity of two arrays that are each SORTED
+    * ascending with distinct elements (build them with
+    * [[tokenSetSorted]] / `array_sort(shinglesOfTokens(...))`); NULL
+    * for two empty sets (try_divide — callers may pass pre-tokenized
+    * empties). The intersection size comes from the allocation-free
+    * two-pointer kernel ([[graft.functions.SortedIntersectSize]])
+    * instead of `array_intersect`'s per-pair hash set + discarded
+    * result array. This is the per-candidate-pair verify kernel of the
+    * dedup family; SetOpsSpec pins value parity with the
+    * `array_intersect` spelling. */
   def jaccardSorted(a: Column, b: Column): Column = {
     val inter = graft.functions.SetOps.sortedIntersectSize(a, b).cast("double")
     element_at(

@@ -51,11 +51,22 @@ case class SgaResult(
   * fitness in whole-stage codegen, selection + crossover in one narrow
   * `mapPartitions`. `runLoop` drives generations on an RDD core with the
   * same trajectory (SgaSpec pins it): a map draws the mixing key, a
-  * `ShuffledRDD` reproduces `mix`'s permutation, a map selects, crosses,
-  * evaluates and feeds the best to an accumulator, and materialization
-  * (local checkpoint or parquet write) is the only action. That is one
-  * Spark job per generation with no Catalyst planning in the in-memory
-  * loop, where the reference paid a Hadoop job (MapReduce.java:281-302).
+  * `ShuffledRDD` reproduces `mix`'s routing, a map sorts its partition
+  * by key, selects, crosses, evaluates and feeds the best to an
+  * accumulator, and materialization (local checkpoint or parquet write)
+  * is the only action. That is one Spark job per generation with no
+  * Catalyst planning in the in-memory loop, where the reference paid a
+  * Hadoop job (MapReduce.java:281-302).
+  *
+  * The core keeps Spark's per-record costs out of a generation:
+  *  - a generation is one chunk per partition (its genomes, in row
+  *    order), so the block store sizes one object per block; fitness is
+  *    not kept, as breeding re-scores and the durable write re-evaluates;
+  *  - the exchange has no key ordering (Spark's sorting shuffle read
+  *    tracks the size of every record it buffers); each reduce task sorts
+  *    its records itself, stably, so ties keep the fetch order;
+  *  - records cross the exchange raw (`MixRecordSerializer`).
+  * Durable and dedup mode turn chunks into rows at their Dataset edge.
   */
 object Sga {
 
@@ -187,25 +198,29 @@ object Sga {
   /** `runLoop`, also returning its last generation, still materialized. */
   private[sga] def generations(spark: SparkSession, cfg: GaConfig,
       onGeneration: (Int, Long, Long) => Unit,
-      durableRoot: Option[String]): (SgaResult, RDD[Individual]) = {
+      durableRoot: Option[String]): (SgaResult, RDD[Array[Array[Long]]]) = {
     import spark.implicits._
     def bestOf(gen: Int) =
       new BestAccumulator().tap(spark.sparkContext.register(_, s"sga_best_gen_$gen"))
+    def rows(pop: RDD[Array[Array[Long]]]): Dataset[Individual] =
+      spark.createDataset(pop.flatMap(_.iterator.map(Individual(_, 0L))))
     // the generation's one action; the files keep `evaluate`'s schema
-    def materialize(pop: RDD[Individual], gen: Int): RDD[Individual] = durableRoot match {
-      case Some(root) =>
-        saveGeneration(evaluate(spark.createDataset(pop)), root, gen)
-        loadGeneration(spark, root, gen).rdd
-      case None => pop.localCheckpoint(); pop.count(); pop
-    }
+    def materialize(pop: RDD[Array[Array[Long]]], gen: Int): RDD[Array[Array[Long]]] =
+      durableRoot match {
+        case Some(root) =>
+          saveGeneration(evaluate(rows(pop)), root, gen)
+          chunks(loadGeneration(spark, root, gen))
+        case None => pop.localCheckpoint(); pop.count(); pop
+      }
     val first = bestOf(0)
     val resumeFrom = durableRoot.flatMap(latestGeneration(spark, _))
     var pop = resumeFrom match {
       case Some(g) =>
-        val saved = loadGeneration(spark, durableRoot.get, g).rdd
-        saved.mapPartitions(scored(_, first)).foreach(_ => ())
+        val saved = chunks(loadGeneration(spark, durableRoot.get, g))
+        saved.foreach(_.foreach(genome => first.add((genome, Genome.popcount(genome)))))
         saved
-      case None => materialize(initPopulation(spark, cfg).rdd.mapPartitions(scored(_, first)), 0)
+      case None =>
+        materialize(initPopulation(spark, cfg).rdd.mapPartitions(it => scored(it.map(_.genome), first)), 0)
     }
     var gen = resumeFrom.getOrElse(0)
     var fittest = first.value
@@ -216,7 +231,7 @@ object Sga {
       val bred = breed(pop, cfg, gen, acc)
       // reference op 14: the incremental variant's offspring dedup
       val next = materialize(if (!cfg.dedupOffspring) bred
-        else spark.createDataset(bred).dropDuplicates("genome").rdd, gen + 1)
+        else chunks(rows(bred).dropDuplicates("genome")), gen + 1)
       pop.unpersist(blocking = false)
       pop = next
       gen += 1
@@ -229,34 +244,39 @@ object Sga {
 
   /** One generation, ops 7-10 + 3, with `mix`'s permutation and
     * `selectAndCross`'s draws: the key is catalyst's own `Rand`, seeded
-    * as in `mix` and initialized with the partition index, and the
-    * exchange routes it as Spark SQL's hash partitioning does and sorts
-    * each partition by it. A (double, long array) record lets Spark pick
-    * Kryo for the shuffle; fitness is recomputed after it. */
-  private def breed(pop: RDD[Individual], cfg: GaConfig, gen: Int,
-      acc: BestAccumulator): RDD[Individual] = {
+    * as in `mix` and initialized with the partition index, the exchange
+    * routes it as Spark SQL's hash partitioning does, and each reduce
+    * task sorts its records by key as `sortWithinPartitions` does.
+    * Fitness is recomputed after the exchange. */
+  private[sga] def breed(pop: RDD[Array[Array[Long]]], cfg: GaConfig, gen: Int,
+      acc: BestAccumulator): RDD[Array[Array[Long]]] = {
     val (mixSeed, seed, s) = (cfg.seed * 1000003L + gen, cfg.seed, cfg.tournamentSize)
     val keyed = pop.mapPartitionsWithIndex { (p, it) =>
       val key = Rand(Literal(mixSeed))
       key.initialize(p)
-      it.map(ind => (key.eval().asInstanceOf[Double], ind.genome))
+      it.flatMap(_.iterator.map(g => (key.eval().asInstanceOf[Double], g)))
     }
     new ShuffledRDD[Double, Array[Long], Array[Long]](keyed, new MixPartitioner(cfg.numPartitions))
-      .setKeyOrdering(Ordering.Double.TotalOrdering)
+      .setSerializer(new MixRecordSerializer)
       .mapPartitionsWithIndex { (p, it) =>
+        val records = it.toArray
+        // a stable sort (TimSort on objects): equal keys keep the fetch order
+        java.util.Arrays.sort(records, Ordering.Double.TotalOrdering.on[(Double, Array[Long])](_._1))
         val rng = new Random(seed * 7919L + gen * 104729L + p)
-        val parents = it.map { case (_, g) => Individual(g, Genome.popcount(g)) }
-        scored(Tournament.selectAndCross(parents, s, rng), acc)
+        val parents = records.iterator.map { case (_, g) => Individual(g, Genome.popcount(g)) }
+        scored(Tournament.selectAndCross(parents, s, rng).map(_.genome), acc)
       }
   }
 
-  /** ONEMAX-scores each individual (op 3) and offers it to `acc`. */
-  private def scored(it: Iterator[Individual], acc: BestAccumulator): Iterator[Individual] =
-    it.map { ind =>
-      val f = Genome.popcount(ind.genome)
-      acc.add((ind.genome, f))
-      Individual(ind.genome, f)
-    }
+  /** A generation's rows as chunks, one per partition, in row order. */
+  private def chunks(pop: Dataset[Individual]): RDD[Array[Array[Long]]] =
+    pop.rdd.mapPartitions(it => Iterator.single(it.map(_.genome).toArray))
+
+  /** A partition's genomes as its one chunk, each ONEMAX-scored (op 3)
+    * and offered to `acc`. */
+  private def scored(genomes: Iterator[Array[Long]],
+      acc: BestAccumulator): Iterator[Array[Array[Long]]] =
+    Iterator.single(genomes.map { g => acc.add((g, Genome.popcount(g))); g }.toArray)
 }
 
 /** Spark SQL's `HashPartitioning` of one double column: pmod of its

@@ -71,7 +71,7 @@ class SetOpsSpec extends SparkSpec {
   }
 
   test("jaccardSorted is bit-identical to the legacy jaccard spelling") {
-    import graft.pipeline.TextFunctions
+    import graft.pipeline.{JaccardReference, TextFunctions}
     val rng = new scala.util.Random(13)
     val words = Vector("the", "quick", "brown", "fox", "jumps", "over",
       "lazy", "dog", "lorem", "ipsum", "dolor", "sit", "amet")
@@ -85,7 +85,7 @@ class SetOpsSpec extends SparkSpec {
         TextFunctions.tokenSetSorted(col("ta")).as("sa"),
         TextFunctions.tokenSetSorted(col("tb")).as("sb"))
     val rows = pairs.select(
-      TextFunctions.jaccard(col("ua"), col("ub")).as("legacy"),
+      JaccardReference.jaccard(col("ua"), col("ub")).as("legacy"),
       TextFunctions.jaccardSorted(col("sa"), col("sb")).as("sorted")).collect()
     rows.foreach { r =>
       assert(r.isNullAt(0) == r.isNullAt(1), r.toString)

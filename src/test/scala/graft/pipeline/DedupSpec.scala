@@ -405,7 +405,7 @@ class DedupSpec extends SparkSpec {
     val brute = sh.alias("a").join(sh.alias("b"),
         col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"),
-        TextFunctions.jaccard(col("a.ts"), col("b.ts")).as("j"))
+        JaccardReference.jaccard(col("a.ts"), col("b.ts")).as("j"))
       .filter(col("j") >= 0.5)
       .select("id_a", "id_b").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet

@@ -54,4 +54,18 @@ class DurableSpec extends SparkSpec {
     val vec = Cga.loadVector(spark, root, last).collect()
     assert(vec.map(_.probs.length).sum == cfg.nBits)
   }
+
+  test("a resumed cGA run takes the uninterrupted run's trajectory") {
+    // 4 splits over local[4]'s 4 partitions: a parquet read of the saved
+    // vector places its files by size, and the draws are keyed by partition
+    val cfg = CgaConfig(nBits = 64, numSplits = 4, tournamentSize = 8,
+      population = 20, seed = 42, maxIterations = 400)
+    val whole = Cga.runLoop(spark, cfg)
+    val root = tmpDir()
+    Cga.runLoop(spark, cfg.copy(maxIterations = 5), durableRoot = Some(root), saveEvery = 5)
+    val resumed = Cga.runLoop(spark, cfg, durableRoot = Some(root), saveEvery = 50)
+    assert(whole.converged && resumed.converged)
+    assert(resumed.iterations == whole.iterations)
+    assert(resumed.vector.toSeq == whole.vector.toSeq)
+  }
 }

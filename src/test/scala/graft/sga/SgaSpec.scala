@@ -5,6 +5,8 @@ import java.nio.file.Files
 import scala.collection.mutable.ArrayBuffer
 import scala.math.Ordering.Implicits.seqOrdering
 
+import org.apache.spark.ShuffleDependency
+import org.apache.spark.rdd.RDD
 import org.apache.spark.storage.StorageLevel
 import org.scalatest.concurrent.Eventually._
 import org.scalatest.time.SpanSugar._
@@ -110,6 +112,10 @@ class SgaSpec extends SparkSpec {
   private def multiset(pop: Array[Individual]): Seq[(Seq[Long], Long)] =
     pop.map(i => (i.genome.toSeq, i.fitness)).toSeq.sorted
 
+  /** A chunked generation's individuals, scored. */
+  private def individuals(pop: RDD[Array[Array[Long]]]): Array[Individual] =
+    pop.collect().flatten.map(g => Individual(g, Genome.popcount(g)))
+
   test("the RDD loop core computes the same trajectory as the Dataset operators") {
     loopCfgs.foreach { c =>
       // the Dataset spelling: step + best, each generation local-checkpointed
@@ -125,7 +131,7 @@ class SgaSpec extends SparkSpec {
       val (r, last) = Sga.generations(spark, c, (_, _, _) => (), None)
       assert(r.history == history.toSeq, s"history diverged for $c")
       assert(r.generations == gen)
-      assert(multiset(last.collect()) == multiset(pop.collect()),
+      assert(multiset(individuals(last)) == multiset(pop.collect()),
         s"final population diverged for $c")
       last.unpersist(blocking = true)
     }
@@ -151,6 +157,26 @@ class SgaSpec extends SparkSpec {
           s"generation $g diverged for $c")
       }
     }
+  }
+
+  test("a generation is one genome chunk per partition, mixed by an unsorted raw-record shuffle") {
+    val c = cfg.copy(maxGenerations = 2, convergenceSlack = -1)
+    val (_, last) = Sga.generations(spark, c, (_, _, _) => (), None)
+    try {
+      assert(last.mapPartitions(it => Iterator.single(it.size)).collect().toSeq ==
+        Seq.fill(c.numPartitions)(1))
+      def shuffles(rdd: RDD[_]): Seq[ShuffleDependency[_, _, _]] = rdd.dependencies.flatMap {
+        case s: ShuffleDependency[_, _, _] => s +: shuffles(s.rdd)
+        case d => shuffles(d.rdd)
+      }
+      // the next generation's exchange (the materialized one ends the lineage)
+      val acc = new BestAccumulator
+      spark.sparkContext.register(acc)
+      val mixing = shuffles(Sga.breed(last, c, c.maxGenerations, acc))
+      assert(mixing.size == 1)
+      assert(mixing.head.keyOrdering.isEmpty, "the exchange sorts records by key again")
+      assert(mixing.head.serializer.isInstanceOf[MixRecordSerializer])
+    } finally last.unpersist(blocking = true)
   }
 
   test("runLoop runs one Spark job per generation, plus one for generation 0") {
