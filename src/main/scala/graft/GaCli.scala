@@ -70,10 +70,9 @@ object GaCli {
         val n = strLen - strLen % splits // keep splits even
         val cfg = CgaConfig(nBits = n, numSplits = splits,
           tournamentSize = t, population = pop, maxIterations = iters)
-        val r = Cga.runLoop(spark, cfg, durableRoot = resumeDir)
-        // reference log line: CGA:<it>:<pop>:<best>:<tot>:<strLen>:<un>:<millis>
-        println(s"CGA:${r.iterations}:$pop:${r.winnerFitness}:$n:$n:" +
-          s"${if (r.converged) 0 else -1}:-")
+        val r = Cga.runLoop(spark, cfg, durableRoot = resumeDir, onIteration = (it, best, un, ms) =>
+          // reference log line: CGA:<it>:<pop>:<best>:<tot>:<strLen>:<un>:<millis>
+          println(s"CGA:$it:$pop:$best:$n:$n:$un:$ms"))
         println(s"cGA done: winnerFitness=${r.winnerFitness} " +
           s"iterations=${r.iterations} converged=${r.converged}")
       case other => sys.error(s"unknown mode $other\n$usage")

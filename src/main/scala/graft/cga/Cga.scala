@@ -2,9 +2,11 @@ package graft.cga
 
 import java.util.Random
 
+import scala.collection.mutable.ArrayBuffer
+
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{Column, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
 import graft.core.Genome
@@ -62,53 +64,46 @@ case class CgaResult(
   * (reference: /root/reference/src/edu/illinois/ga/CGA.java; op-by-op
   * mapping in SURVEY.md §2.1 ops 15-22).
   *
-  * Per-iteration physical shape — contrast with the reference's
-  * map/shuffle/reduce + three HDFS side channels:
-  *   1. `sample`: narrow map, each split draws its T candidate
-  *      sub-genomes in place (no shuffle, no tagged-union records);
-  *   2. `candidateTotals`: T per-candidate popcount sums as ONE
-  *      partial+final aggregate — T is a driver-side constant, so the
-  *      per-candidate sums are T columns, not a groupBy key: no
-  *      exchange at all, replacing the reference's global/<taskId>
-  *      side files + findWinner() re-read (:126-164,195-260);
-  *   3. winner/loser argmax/argmin over T numbers on the driver,
-  *      closed over by the update (a literal broadcast — replaces the
-  *      reference's static `firstTime` JVM-reuse hazard, :177);
-  *   4. `update`: narrow map, per-bit ±delta nudge + in-band count.
-  * Zero wide shuffles per iteration; the only cluster round-trip is
-  * the totals aggregation — the algorithmic minimum (a global
-  * tournament needs a global sum).
+  * An iteration is one narrow map and one job over the vector's
+  * partitions, where the reference ran a Hadoop job plus three HDFS side
+  * channels:
+  *   1. `Step`, the map: each split takes the previous iteration's
+  *      winner/loser update (op 19, counting its cells still in the
+  *      unconverged band, op 20), then draws this iteration's T
+  *      candidate sub-genomes in place (op 16): no shuffle, no
+  *      tagged-union records;
+  *   2. `Summary`, the job: per partition the T candidate popcount
+  *      totals and the unconverged count, combined on the driver
+  *      (ops 17-18's side files + findWinner re-read, op 20's sum);
+  *   3. winner/loser argmax/argmin over T numbers on the driver, handed
+  *      to the next `Step` (replaces the reference's static `firstTime`
+  *      JVM-reuse hazard, :177).
+  * Zero shuffles; the one cluster round-trip per iteration is the
+  * algorithmic minimum (a global tournament needs a global sum). The
+  * test-scope `CgaReference` spells the same ops as Dataset operators
+  * over the same kernels (`sampleSplit`/`updateSplit`).
+  *
+  * Nothing the loop hands Spark per iteration is a Scala lambda: the map
+  * and the job's function are named classes. Spark's closure cleaner
+  * reads and parses the class file of every lambda it is given (and of
+  * the lambdas `reduce`/`count` wrap around it) on the driver, which
+  * cost about as long as the iteration's job; a named function is left
+  * as it is.
   */
 object Cga {
 
-  /** Column expr: total set bits of a bit-packed Array[Long] (native
-    * codegen'd expression, graft.functions.PopCountArray). */
-  private def popcountArray(c: Column): Column =
-    graft.functions.PopCountArray.popcountArray(c)
-
-  /** Reference op 15 (InitialCGAMapper, CGA.java:38-67): every cell
-    * starts at p = 0.5. */
-  def initVector(spark: SparkSession, cfg: CgaConfig): Dataset[VectorSplit] = {
-    import spark.implicits._
-    val bits = cfg.splitBits
-    spark.range(0L, cfg.numSplits.toLong, 1L,
-        math.min(cfg.numSplits, spark.sparkContext.defaultParallelism))
-      .map(id => VectorSplit(id, Array.fill(bits)(0.5)))
-  }
-
   /** Per-partition RNG for iteration `iteration` — (seed, iteration,
     * partition)-keyed so retries and cache evictions recompute
-    * identical draws on both the Dataset and RDD paths. */
-  private def iterationRng(seed: Long, iteration: Int): Random =
+    * identical draws on every path. */
+  private[cga] def iterationRng(seed: Long, iteration: Int): Random =
     new Random(seed * 6364136223846793005L + iteration * 9973L +
       TaskContext.getPartitionId())
 
-  /** The sampling kernel for one split (shared by the Dataset operator
-    * and the RDD iteration core so the two paths cannot diverge):
-    * draw T candidate sub-genomes, bit b set with probability probs(b).
-    * The reference's `abs(nextLong) <= fixedPointProb` draw is the
-    * fixed-point spelling of `nextDouble < p`. */
-  private def sampleSplit(vs: VectorSplit, rng: Random, t: Int): SampledSplit = {
+  /** Reference op 16 (CGAMapper, CGA.java:70-124), the sampling kernel
+    * for one split: draw T candidate sub-genomes, bit b set with
+    * probability probs(b). The reference's `abs(nextLong) <=
+    * fixedPointProb` draw is the fixed-point spelling of `nextDouble < p`. */
+  private[cga] def sampleSplit(vs: VectorSplit, rng: Random, t: Int): SampledSplit = {
     val words = Genome.words(vs.probs.length)
     val cands = Array.ofDim[Array[Long]](t)
     var l = 0
@@ -123,31 +118,6 @@ object Cga {
       l += 1
     }
     SampledSplit(vs.splitId, vs.probs, cands)
-  }
-
-  /** Reference op 16 (CGAMapper, CGA.java:70-124): sample T candidate
-    * sub-genomes per split. Narrow (no shuffle); seeded per
-    * (iteration, partition). */
-  def sample(vectors: Dataset[VectorSplit], cfg: CgaConfig, iteration: Int)
-      : Dataset[SampledSplit] = {
-    import vectors.sparkSession.implicits._
-    val t = cfg.tournamentSize
-    val seed = cfg.seed
-    vectors.mapPartitions { it =>
-      val rng = iterationRng(seed, iteration)
-      it.map(vs => sampleSplit(vs, rng, t))
-    }
-  }
-
-  /** Reference op 17+18 front half (CGA.java:126-164 side files +
-    * :195-260 findWinner re-read): per-candidate total ones across all
-    * splits, as T sum columns in one partial+final aggregate. */
-  def candidateTotals(sampled: Dataset[SampledSplit], cfg: CgaConfig): Array[Long] = {
-    val t = cfg.tournamentSize
-    val sums = (0 until t).map(l =>
-      sum(popcountArray(col("candidates").getItem(l))).as(s"c$l"))
-    val row = sampled.agg(sums.head, sums.tail: _*).head()
-    (0 until t).map(row.getLong).toArray
   }
 
   /** Reference op 18 (CGA.java:236-258): winner = argmax, loser =
@@ -166,15 +136,14 @@ object Cga {
   }
 
   /** Reference op 19 (CGA.java:262-309), the update kernel for one
-    * split, shared by `update` and the RDD iteration core: per bit where
-    * winner and loser disagree, nudge p by ±delta toward the winner; p
-    * clamped to [0,1] (the reference lets its fixed-point cells drift
-    * past the representable range — clamping is the well-defined
-    * spelling of the same sampling behavior). Returns the updated split
-    * and its count of cells still in the unconverged band
-    * [lLimit, uLimit] (op 20's per-task side write + driver sum,
+    * split: per bit where winner and loser disagree, nudge p by ±delta
+    * toward the winner; p clamped to [0,1] (the reference lets its
+    * fixed-point cells drift past the representable range — clamping is
+    * the well-defined spelling of the same sampling behavior). Returns
+    * the updated split and its count of cells still in the unconverged
+    * band [lLimit, uLimit] (op 20's per-task side write + driver sum,
     * :310-324,443-496). */
-  private def updateSplit(ss: SampledSplit, winner: Int, loser: Int,
+  private[cga] def updateSplit(ss: SampledSplit, winner: Int, loser: Int,
       delta: Double, lLim: Double, uLim: Double): (VectorSplit, Long) = {
     val w = ss.candidates(winner)
     val l = ss.candidates(loser)
@@ -192,17 +161,6 @@ object Cga {
       b += 1
     }
     (VectorSplit(ss.splitId, probs), unConverged)
-  }
-
-  /** Reference op 19 over the Dataset: a narrow map, since the
-    * candidates are already co-located with their split. */
-  def update(sampled: Dataset[SampledSplit], winner: Int, loser: Int,
-      cfg: CgaConfig): Dataset[(VectorSplit, Long)] = {
-    import sampled.sparkSession.implicits._
-    val delta = cfg.delta
-    val lLim = cfg.lLimit
-    val uLim = cfg.uLimit
-    sampled.map(ss => updateSplit(ss, winner, loser, delta, lLim, uLim))
   }
 
   /** Save/load the probability vector durably (reference op 22's
@@ -225,150 +183,157 @@ object Cga {
       .maxOption
   }
 
+  /** A loop row: a split with its iteration's candidates, and the
+    * unconverged-cell count of the update that produced the split (-1:
+    * unknown, as for an initial or resumed split). */
+  private type Row = (SampledSplit, Long)
+
+  /** An iteration's map: the update by `winner`/`loser` (none when
+    * `winner` < 0), then `t` candidates drawn with iteration
+    * `iteration`'s RNG. */
+  private final class Step(cfg: CgaConfig, iteration: Int, winner: Int, loser: Int, t: Int)
+      extends (Iterator[Row] => Iterator[Row]) with Serializable {
+    def apply(rows: Iterator[Row]): Iterator[Row] = {
+      val rng = iterationRng(cfg.seed, iteration)
+      rows.map { case (ss, u) =>
+        val (v, un) =
+          if (winner < 0) (VectorSplit(ss.splitId, ss.probs), u)
+          else updateSplit(ss, winner, loser, cfg.delta, cfg.lLimit, cfg.uLimit)
+        (sampleSplit(v, rng, t), un)
+      }
+    }
+  }
+
+  /** A partition's share of an iteration's job: its rows' T candidate
+    * popcount totals, their unconverged-cell sum (-1 if one is
+    * unknown) and, if `keep`, the splits. */
+  private final class Summary(t: Int, keep: Boolean)
+      extends ((TaskContext, Iterator[Row]) => (Array[Long], Long, Array[VectorSplit]))
+      with Serializable {
+    def apply(ctx: TaskContext, rows: Iterator[Row]): (Array[Long], Long, Array[VectorSplit]) = {
+      val totals = new Array[Long](t)
+      var unConverged = 0L
+      val splits = ArrayBuffer[VectorSplit]()
+      rows.foreach { case (ss, u) =>
+        unConverged = if (unConverged < 0L || u < 0L) -1L else unConverged + u
+        var l = 0
+        while (l < t) { totals(l) += Genome.popcount(ss.candidates(l)); l += 1 }
+        if (keep) splits += VectorSplit(ss.splitId, ss.probs)
+      }
+      (totals, unConverged, splits.toArray)
+    }
+  }
+
+  /** Runs `Summary` over `rows` as one job and combines the partitions'
+    * shares on the driver; the splits come back in id order. */
+  private def summarize(rows: RDD[Row], t: Int, keep: Boolean)
+      : (Array[Long], Long, Array[VectorSplit]) = {
+    val totals = new Array[Long](t)
+    var unConverged = 0L
+    val splits = ArrayBuffer[VectorSplit]()
+    rows.sparkContext.runJob(rows, new Summary(t, keep), rows.partitions.indices,
+      (_: Int, share: (Array[Long], Long, Array[VectorSplit])) => {
+        var l = 0
+        while (l < t) { totals(l) += share._1(l); l += 1 }
+        unConverged = if (unConverged < 0L || share._2 < 0L) -1L else unConverged + share._2
+        splits ++= share._3
+      })
+    (totals, unConverged, splits.toArray.sortBy(_.splitId))
+  }
+
   /** Reference ops 11/20/22 (driver loop CGA.java:443-496): iterate
     * until no cell is in the unconverged band. `durableRoot` persists
     * the vector every `saveEvery` iterations and resumes a rerun from
-    * the latest saved one.
+    * the latest saved one. `onIteration(iteration, winnerFitness,
+    * unConverged, millis)` is the reference's
+    * `CGA:<it>:<pop>:<best>:<tot>:<strLen>:<un>:<millis>` record.
     *
-    * The iteration DRIVER runs on the RDD core: a cGA iteration is two
-    * tiny cluster round-trips over an already-partitioned vector, and
-    * at hundreds of iterations per run the per-iteration Catalyst
-    * analyze/optimize/codegen cycle of a Dataset plan dominates wall
-    * time (~0.25 s/iteration vs ~5 ms of actual work — measured round
-    * 1: 12.5 s of the 36.7 s bench total was this planning latency).
-    * Tight iterative loops on a stable partitioning are the one case
-    * where Spark's own libraries (MLlib, GraphX) also drop to RDDs —
-    * the Dataset operators above (`sample`/`candidateTotals`/`update`)
-    * remain the declarative spelling and share their kernels
-    * (`sampleSplit`/`updateSplit`) with this loop, so the two paths
-    * compute identical trajectories (CgaSpec asserts it).
+    * The loop runs on the RDD core: at hundreds of iterations per run
+    * the per-iteration Catalyst analyze/optimize/codegen cycle of a
+    * Dataset plan would dominate (~0.25 s/iteration vs ~5 ms of actual
+    * work — measured round 1). Tight iterative loops on a stable
+    * partitioning are the one case where Spark's own libraries (MLlib,
+    * GraphX) also drop to RDDs.
     *
-    * Exactly ONE job per iteration: iteration i's totals reduce ALSO
-    * sums iteration i−1's unconverged-cell counts, which ride the
-    * state rows from the (narrow) update map — the convergence read
-    * that used to be its own job is piggybacked one iteration late.
-    * The trajectory is IDENTICAL to the two-job spelling (same
-    * (seed, iteration, partition)-keyed draws, same updates, same
-    * exit iteration — CgaSpec pins it); the only extra work is one
-    * discarded deterministic sample at the detection iteration, which
-    * nothing observes. All RNG is (seed, iteration, partition)-keyed,
-    * so a lost partition only costs a deterministic recompute, never
-    * a different answer. localCheckpoint every 20 iterations bounds
-    * lineage depth. */
+    * Exactly ONE job per iteration: a `Step` applies iteration i−1's
+    * update and draws iteration i's sample, and its rows carry the
+    * update's unconverged counts, so iteration i's job also reads
+    * iteration i−1's convergence, one iteration late. The trajectory is
+    * the sequential spelling's (same (seed, iteration, partition)-keyed
+    * draws, same updates, same exit iteration — CgaSpec pins it against
+    * `CgaReference`); the only extra work is one discarded deterministic
+    * sample at the detection iteration, which nothing observes. For the
+    * same reason an iteration's record fires one job late, with the
+    * millis of its own job and driver step. Each iteration's rows are
+    * persisted and the previous ones released; localCheckpoint every 20
+    * iterations bounds lineage depth. */
   def runLoop(spark: SparkSession, cfg: CgaConfig,
-      durableRoot: Option[String] = None, saveEvery: Int = 10): CgaResult = {
+      durableRoot: Option[String] = None, saveEvery: Int = 10,
+      onIteration: (Int, Long, Long, Long) => Unit = (_, _, _, _) => ()): CgaResult = {
     import spark.implicits._
     val sc = spark.sparkContext
-    val parts = math.min(cfg.numSplits, sc.defaultParallelism)
-    // a resumed vector takes the uninterrupted run's layout, the splits
-    // in id order sliced as `sc.range` slices them: the draws are keyed
-    // by partition, and a parquet read places its files by size
+    val t = cfg.tournamentSize
+    // the draws are keyed by partition: a fresh or resumed vector is
+    // laid out as its splits in id order, sliced as `sc.range` slices
+    // (a parquet read would place the saved files by size)
     val resumed = durableRoot.flatMap(r => latestIteration(spark, r).map(i =>
-      (sc.parallelize(loadVector(spark, r, i).collect().sortBy(_.splitId).toSeq, parts), i)))
-    val bits = cfg.splitBits
-    // state rows carry (split, unconvergedCellsFromProducingUpdate);
-    // init/resumed rows carry the -1 sentinel (unknown — never
-    // terminates the loop, exactly the sequential spelling's
-    // unConverged = -1 start)
-    var state: org.apache.spark.rdd.RDD[(VectorSplit, Long)] =
-      resumed.map(_._1)
-        .getOrElse(sc.range(0L, cfg.numSplits.toLong, 1L, parts)
-          .map(id => VectorSplit(id, Array.fill(bits)(0.5))))
-        .map(v => (v, -1L))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    var it = resumed.map(_._2).getOrElse(0)
+      (loadVector(spark, r, i).collect().sortBy(_.splitId), i)))
+    val start = resumed.fold(0)(_._2)
+    val vector = resumed.fold(Array.tabulate(cfg.numSplits)(id =>
+      VectorSplit(id.toLong, Array.fill(cfg.splitBits)(0.5))))(_._1)
+    var rows: RDD[Row] = sc.parallelize(
+      vector.toSeq.map(v => (SampledSplit(v.splitId, v.probs, Array.empty), -1L)),
+      math.min(cfg.numSplits, sc.defaultParallelism))
+    def save(r: => RDD[Row], it: Int): Unit = durableRoot.foreach(root =>
+      saveVector(spark.createDataset(r.map { case (ss, _) => VectorSplit(ss.splitId, ss.probs) }),
+        root, it))
+    // the update `rows` still owe: the last winner and loser
+    var (winner, loser) = (-1, -1)
     var winnerFitness = -1L
     var unConverged = -1L
-    val t = cfg.tournamentSize
-    val seed = cfg.seed
-    val (delta, lLim, uLim) = (cfg.delta, cfg.lLimit, cfg.uLimit)
-    var prevSampled: Option[org.apache.spark.rdd.RDD[_]] = None
+    var it = start
+    var stepStart = System.nanoTime()
     var done = false
     while (!done && it < cfg.maxIterations) {
-      val iteration = it
-      // sampled rows keep the previous update's unconverged counts so
-      // the totals job below can fold them in
-      val sampled = state.mapPartitions { vs =>
-        val rng = iterationRng(seed, iteration)
-        vs.map { case (v, u) => (sampleSplit(v, rng, t), u) }
-      }.persist(StorageLevel.MEMORY_AND_DISK)
-      // THE job: per-candidate popcount totals (partial per partition
-      // + driver combine — the reference's global/<taskId> side files
-      // + findWinner re-read, CGA.java:126-164,195-260) fused with the
-      // previous iteration's convergence sum
-      val (totals, prevUnconv) = {
-        val (acc, u, unknown) = sampled.mapPartitions { ss =>
-          val acc = new Array[Long](t)
-          var u = 0L
-          var unknown = false
-          ss.foreach { case (s, pu) =>
-            if (pu < 0L) unknown = true else u += pu
-            var l = 0
-            while (l < t) { acc(l) += Genome.popcount(s.candidates(l)); l += 1 }
-          }
-          Iterator.single((acc, u, unknown))
-        }.reduce { (a, b) =>
-          var i = 0; while (i < t) { a._1(i) += b._1(i); i += 1 }
-          (a._1, a._2 + b._2, a._3 || b._3)
-        }
-        (acc, if (unknown) -1L else u)
-      }
-      // previous iteration's sampled blocks: its update (= state) has
-      // now been materialized through this reduce
-      prevSampled.foreach(_.unpersist(blocking = false))
-      prevSampled = None
-      if (prevUnconv == 0L) {
-        // the PREVIOUS update converged — this iteration's sample is
-        // discarded unobserved; winnerFitness/it already describe the
-        // converged iteration (the sequential spelling's exit state)
-        unConverged = 0L
-        sampled.unpersist(blocking = false)
-        // converged-save parity with the sequential spelling's
-        // unConverged == 0 save (overwrite-idempotent if it already
-        // saved on the cadence)
-        durableRoot.foreach(r =>
-          saveVector(spark.createDataset(state.map(_._1)), r, it))
+      val prev = rows
+      rows = prev.mapPartitions(new Step(cfg, it, winner, loser, t))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      if (it > start && it % 20 == 0) { rows.localCheckpoint(); () }
+      val (totals, u, _) = summarize(rows, t, keep = false)
+      if (prev.getStorageLevel != StorageLevel.NONE) prev.unpersist(blocking = false)
+      unConverged = u
+      val now = System.nanoTime()
+      if (it > start) onIteration(it, winnerFitness, u, (now - stepStart) / 1000000L)
+      stepStart = now
+      if (u == 0L) {
+        // the previous update converged: this iteration's sample is
+        // discarded unobserved, and `it`/`winnerFitness` describe the
+        // converged iteration (the sequential spelling's exit state);
+        // the converged vector is saved, unless the cadence just did
+        winner = -1
+        if (it % saveEvery != 0) save(rows, it)
         done = true
       } else {
-        unConverged = prevUnconv
         val (w, l) = pickWinnerLoser(totals)
+        winner = w; loser = l
         winnerFitness = totals(w)
-        val updated = sampled
-          .map { case (ss, _) => updateSplit(ss, w, l, delta, lLim, uLim) }
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        state.unpersist(blocking = false)
-        state = updated
-        prevSampled = Some(sampled)
         it += 1
-        if (it % 20 == 0) { state.localCheckpoint(); () }
-        durableRoot.foreach { r =>
-          if (it % saveEvery == 0)
-            saveVector(spark.createDataset(state.map(_._1)), r, it)
-        }
+        if (it % saveEvery == 0)
+          save(rows.mapPartitions(new Step(cfg, it, winner, loser, 0)), it)
       }
     }
-    if (!done && it >= cfg.maxIterations) {
-      // exited on the iteration budget: the LAST update's counts were
-      // never folded into a reduce — one final tiny job keeps the
-      // converged flag exact (the sequential spelling read it every
-      // iteration)
-      val (u, unknown) = state.mapPartitions { rows =>
-        var s = 0L
-        var unk = false
-        rows.foreach { case (_, pu) => if (pu < 0L) unk = true else s += pu }
-        Iterator.single((s, unk))
-      }.reduce((a, b) => (a._1 + b._1, a._2 || b._2))
-      unConverged = if (unknown) -1L else u
-      if (unConverged == 0L)
-        durableRoot.foreach(r =>
-          saveVector(spark.createDataset(state.map(_._1)), r, it))
+    // the vector, with the owed update applied (a budget exit) — the
+    // same job reads that update's convergence
+    val last = if (winner < 0) rows else rows.mapPartitions(new Step(cfg, it, winner, loser, 0))
+    val (_, u, splits) = summarize(last, 0, keep = true)
+    if (winner >= 0) {
+      unConverged = u
+      onIteration(it, winnerFitness, u, (System.nanoTime() - stepStart) / 1000000L)
+      if (u == 0L && it % saveEvery != 0) save(last, it)
     }
-    prevSampled.foreach(_.unpersist(blocking = false))
-    val finalVec = state.map(_._1).collect().sortBy(_.splitId).flatMap(_.probs)
-    // collect first, THEN release the loop's last cached RDD: a long
-    // session (bench reps, library callers) must not strand cached
-    // blocks until the ContextCleaner happens to reap them
-    state.unpersist(blocking = false)
-    CgaResult(finalVec, winnerFitness, it, unConverged == 0L)
+    // a long session (bench reps, library callers) must not strand
+    // cached blocks until the ContextCleaner happens to reap them
+    if (rows.getStorageLevel != StorageLevel.NONE) rows.unpersist(blocking = true)
+    CgaResult(splits.flatMap(_.probs), winnerFitness, it, unConverged == 0L)
   }
 }

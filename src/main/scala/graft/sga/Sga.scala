@@ -210,7 +210,11 @@ object Sga {
         case Some(root) =>
           saveGeneration(evaluate(rows(pop)), root, gen)
           chunks(loadGeneration(spark, root, gen))
-        case None => pop.localCheckpoint(); pop.count(); pop
+        case None =>
+          pop.localCheckpoint()
+          spark.sparkContext.runJob(pop, new Drain[Array[Array[Long]]], pop.partitions.indices,
+            (_: Int, _: Unit) => ())
+          pop
       }
     val first = bestOf(0)
     val resumeFrom = durableRoot.flatMap(latestGeneration(spark, _))
@@ -277,6 +281,13 @@ object Sga {
   private def scored(genomes: Iterator[Array[Long]],
       acc: BestAccumulator): Iterator[Array[Array[Long]]] =
     Iterator.single(genomes.map { g => acc.add((g, Genome.popcount(g))); g }.toArray)
+}
+
+/** A job that only computes its partitions: materialization's action.
+  * A named function, where `count` hands Spark its own lambdas, whose
+  * classes the closure cleaner reads and parses on every call. */
+private final class Drain[T] extends ((TaskContext, Iterator[T]) => Unit) with Serializable {
+  def apply(ctx: TaskContext, rows: Iterator[T]): Unit = while (rows.hasNext) rows.next()
 }
 
 /** Spark SQL's `HashPartitioning` of one double column: pmod of its

@@ -49,6 +49,20 @@ class GaCliSpec extends SparkSpec {
     assert(records("sga", "2", "128", "4", "0.5", root) == Seq(3, 4))
   }
 
+  test("cga CLI prints one CGA record per iteration, the last one converged") {
+    val out = new java.io.ByteArrayOutputStream()
+    // strLen 16, population ceil(16 log2 16) = 64, T = 4
+    Console.withOut(out)(GaCli.main(Array("cga", "2", "16", "500", "1", "4")))
+    val lines = out.toString.linesIterator.toSeq
+    // CGA:<it>:<pop>:<best>:<tot>:<strLen>:<un>:<millis>
+    val records = lines.filter(_.startsWith("CGA:")).map(_.split(":"))
+    assert(records.nonEmpty && records.forall(f => f.length == 8 && f(2) == "64"))
+    assert(records.map(_(1).toInt) == (1 to records.length))
+    assert(records.last(6) == "0" && records.init.forall(_(6).toLong > 0L))
+    assert(lines.contains(s"cGA done: winnerFitness=${records.last(3)} " +
+      s"iterations=${records.length} converged=true"))
+  }
+
   test("the CLI leaves an embedding caller's session running") {
     GaCli.main(Array("sga", "2", "64", "1", "0.5"))
     assert(!spark.sparkContext.isStopped,

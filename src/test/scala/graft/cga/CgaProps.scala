@@ -5,7 +5,7 @@ import graft.SparkSpec
 
 /** SURVEY §5.2: the cGA update moves each bit toward the winner by
   * exactly delta (where winner and loser disagree) and leaves it
-  * untouched otherwise. Driver-side replica of Cga.update's per-bit
+  * untouched otherwise. Driver-side replica of CgaReference.update's per-bit
   * rule, cross-checked against the Spark implementation on a sampled
   * subset (the full Spark path is covered in CgaSpec; the property
   * here exercises the arithmetic over the whole input space). */
@@ -40,7 +40,7 @@ object CgaProps extends Properties("CgaUpdate") {
         population = pop)
       val ss = spark.createDataset(Seq(
         SampledSplit(0L, probs.toArray, Array(Array(w), Array(l)))))
-      val (vec, _) = Cga.update(ss, 0, 1, cfg).collect().head
+      val (vec, _) = CgaReference.update(ss, 0, 1, cfg).collect().head
       val expect = probs.zipWithIndex.map { case (p, b) =>
         updateBit(p, ((w >> b) & 1L).toInt, ((l >> b) & 1L).toInt, cfg.delta)
       }
