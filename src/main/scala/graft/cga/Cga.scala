@@ -9,7 +9,7 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
-import graft.core.Genome
+import graft.core.{Genome, Lcg48}
 
 /** One split of the distributed probability vector: `probs(b)` is the
   * probability that gene bit b of this split is 1. The reference stores
@@ -96,7 +96,7 @@ object Cga {
     * partition)-keyed so retries and cache evictions recompute
     * identical draws on every path. */
   private[cga] def iterationRng(seed: Long, iteration: Int): Random =
-    new Random(seed * 6364136223846793005L + iteration * 9973L +
+    new Lcg48(seed * 6364136223846793005L + iteration * 9973L +
       TaskContext.getPartitionId())
 
   /** Reference op 16 (CGAMapper, CGA.java:70-124), the sampling kernel

@@ -1,7 +1,5 @@
 package graft.sga
 
-import java.util.Random
-
 import scala.collection.mutable.ArrayBuffer
 import scala.util.chaining._
 
@@ -13,7 +11,7 @@ import org.apache.spark.sql.catalyst.expressions.{Literal, Murmur3HashFunction, 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
 
-import graft.core.{GaConfig, Genome, Individual, Tournament}
+import graft.core.{GaConfig, Genome, Individual, Lcg48, Tournament}
 
 /** Driver-merged running argmax over (genome, fitness) — the Spark
   * accumulator spelling of the reference's side-channel best files +
@@ -46,7 +44,8 @@ case class SgaResult(
 /** Simple genetic algorithm (ONEMAX), the Spark-first re-expression of
   * the reference's MapReduce.java (SURVEY.md §2.1 ops 1-13).
   *
-  * The Dataset operators (`initPopulation` ... `step`) are the
+  * The Dataset operators (`initPopulation`, `evaluate`, `mix`, and the
+  * test-scope `SgaReference`'s selection, crossover and best) are the
   * declarative spelling: one shuffle per generation (the mixing step),
   * fitness in whole-stage codegen, selection + crossover in one narrow
   * `mapPartitions`. `runLoop` drives generations on an RDD core with the
@@ -66,6 +65,11 @@ case class SgaResult(
   *    tracks the size of every record it buffers); each reduce task sorts
   *    its records itself, stably, so ties keep the fetch order;
   *  - records cross the exchange raw (`MixRecordSerializer`).
+  * Its per-element work is unboxed: the RNG is `Lcg48` (`Random`'s
+  * sequence without the atomic seed), the reduce side sorts an `int`
+  * permutation by a `double` key array, genome words cross the record
+  * streams in bulk, and each partition offers its best to the
+  * accumulator once.
   * Durable and dedup mode turn chunks into rows at their Dataset edge.
   */
 object Sga {
@@ -81,14 +85,14 @@ object Sga {
   /** Reference op 2: seeded parallel population init. `spark.range`
     * replaces the reference's seed-file fan-out trick (op 1,
     * MapReduce.java:314-356) — parallelism is native.
-    * RNG discipline: `new Random(seed + partitionId)`, so results are
+    * RNG discipline: `new Lcg48(seed + partitionId)`, so results are
     * reproducible for a pinned partition count.
     */
   def initPopulation(spark: SparkSession, cfg: GaConfig): Dataset[Individual] = {
     import spark.implicits._
     spark.range(0L, cfg.popSize, 1L, cfg.numPartitions)
       .mapPartitions { it =>
-        val rng = new Random(cfg.seed + TaskContext.getPartitionId())
+        val rng = new Lcg48(cfg.seed + TaskContext.getPartitionId())
         it.map(_ => Individual(Genome.random(cfg.nBits, rng), 0L))
       }
   }
@@ -116,40 +120,6 @@ object Sga {
       .sortWithinPartitions("__mix")
       .drop("__mix")
       .as[Individual]
-  }
-
-  /** Reference ops 9-10: per-partition sliding-window tournament +
-    * paired uniform crossover, one narrow `mapPartitions` (no shuffle;
-    * the mixing shuffle already randomized partition contents).
-    * Emits exactly one child per input row (population preserved). */
-  def selectAndCross(pop: Dataset[Individual], cfg: GaConfig, generation: Int): Dataset[Individual] = {
-    import pop.sparkSession.implicits._
-    val s = cfg.tournamentSize
-    val seed = cfg.seed
-    pop.mapPartitions { it =>
-      val rng = new Random(seed * 7919L + generation * 104729L +
-        TaskContext.getPartitionId())
-      Tournament.selectAndCross(it, s, rng)
-    }
-  }
-
-  /** Reference ops 4-6: global best via the built-in argmax aggregate —
-    * Catalyst runs it partial (per partition) + final, replacing the
-    * reference's side-channel files + driver scan
-    * (MapReduce.java:132-148,386-426). */
-  def best(pop: Dataset[Individual]): (Array[Long], Long) = {
-    val row = pop.agg(
-      max_by(col("genome"), col("fitness")).as("g"),
-      max(col("fitness")).as("f")).head()
-    (row.getSeq[Long](0).toArray, row.getLong(1))
-  }
-
-  /** One generation step: mix → select+cross → (optional incremental-
-    * variant offspring dedup, reference op 14) → evaluate. */
-  def step(pop: Dataset[Individual], cfg: GaConfig, gen: Int): Dataset[Individual] = {
-    val crossed = selectAndCross(mix(pop, cfg, gen), cfg, gen)
-    val next = if (cfg.dedupOffspring) crossed.dropDuplicates("genome") else crossed
-    evaluate(next)
   }
 
   // ---- durable generations (reference ops 13 + 22): Parquet instead
@@ -247,40 +217,124 @@ object Sga {
   }
 
   /** One generation, ops 7-10 + 3, with `mix`'s permutation and
-    * `selectAndCross`'s draws: the key is catalyst's own `Rand`, seeded
-    * as in `mix` and initialized with the partition index, the exchange
-    * routes it as Spark SQL's hash partitioning does, and each reduce
-    * task sorts its records by key as `sortWithinPartitions` does.
-    * Fitness is recomputed after the exchange. */
+    * `SgaReference.selectAndCross`'s draws: the key is catalyst's own
+    * `Rand`, seeded as in `mix` and initialized with the partition index,
+    * the exchange routes it as Spark SQL's hash partitioning does, and
+    * each reduce task sorts its records by key as `sortWithinPartitions`
+    * does. Fitness is recomputed after the exchange. Both stages are
+    * named functions, which Spark's closure cleaner leaves unparsed. */
   private[sga] def breed(pop: RDD[Array[Array[Long]]], cfg: GaConfig, gen: Int,
-      acc: BestAccumulator): RDD[Array[Array[Long]]] = {
-    val (mixSeed, seed, s) = (cfg.seed * 1000003L + gen, cfg.seed, cfg.tournamentSize)
-    val keyed = pop.mapPartitionsWithIndex { (p, it) =>
+      acc: BestAccumulator): RDD[Array[Array[Long]]] =
+    new ShuffledRDD[Double, Array[Long], Array[Long]](
+        pop.mapPartitionsWithIndex(new MixKeys(cfg.seed * 1000003L + gen)),
+        new MixPartitioner(cfg.numPartitions))
+      .setSerializer(new MixRecordSerializer)
+      .mapPartitionsWithIndex(
+        new Breed(cfg.seed * 7919L + gen * 104729L, cfg.tournamentSize, acc))
+
+  /** Breed's map side: each genome keyed by the next draw of `Rand`,
+    * seeded with `mixSeed` and initialized with the partition index. */
+  private final class MixKeys(mixSeed: Long)
+      extends ((Int, Iterator[Array[Array[Long]]]) => Iterator[(Double, Array[Long])])
+      with Serializable {
+    def apply(p: Int, chunks: Iterator[Array[Array[Long]]]): Iterator[(Double, Array[Long])] = {
       val key = Rand(Literal(mixSeed))
       key.initialize(p)
-      it.flatMap(_.iterator.map(g => (key.eval().asInstanceOf[Double], g)))
+      chunks.flatMap(_.iterator.map(g => (key.eval().asInstanceOf[Double], g)))
     }
-    new ShuffledRDD[Double, Array[Long], Array[Long]](keyed, new MixPartitioner(cfg.numPartitions))
-      .setSerializer(new MixRecordSerializer)
-      .mapPartitionsWithIndex { (p, it) =>
-        val records = it.toArray
-        // a stable sort (TimSort on objects): equal keys keep the fetch order
-        java.util.Arrays.sort(records, Ordering.Double.TotalOrdering.on[(Double, Array[Long])](_._1))
-        val rng = new Random(seed * 7919L + gen * 104729L + p)
-        val parents = records.iterator.map { case (_, g) => Individual(g, Genome.popcount(g)) }
-        scored(Tournament.selectAndCross(parents, s, rng).map(_.genome), acc)
+  }
+
+  /** Breed's reduce side: the partition's records in key order, then
+    * tournament selection and crossover with `Lcg48(rngSeed + p)`, the
+    * children scored into `acc`. */
+  private[sga] final class Breed(rngSeed: Long, tournamentSize: Int, acc: BestAccumulator)
+      extends ((Int, Iterator[(Double, Array[Long])]) => Iterator[Array[Array[Long]]])
+      with Serializable {
+    def apply(p: Int, records: Iterator[(Double, Array[Long])]): Iterator[Array[Array[Long]]] = {
+      val rs = records.toArray
+      val order = mixOrder(rs.map(_._1))
+      val parents = Iterator.tabulate(rs.length) { i =>
+        val g = rs(order(i))._2
+        Individual(g, Genome.popcount(g))
       }
+      scored(Tournament.selectAndCross(parents, tournamentSize, new Lcg48(rngSeed + p))
+        .map(_.genome), acc)
+    }
+  }
+
+  /** The indices of `keys` ordered by `java.lang.Double.compare`,
+    * stably: tied keys keep their index order. A merge sort of an `int`
+    * permutation (insertion-sorted runs, then bottom-up merges), so no
+    * key is boxed. */
+  private[sga] def mixOrder(keys: Array[Double]): Array[Int] = {
+    val n = keys.length
+    val Run = 32
+    var src = new Array[Int](n)
+    var dst = new Array[Int](n)
+    var i = 0
+    while (i < n) { src(i) = i; i += 1 }
+    var lo = 0
+    while (lo < n) {
+      val hi = math.min(lo + Run, n)
+      var j = lo + 1
+      while (j < hi) {
+        val v = src(j)
+        var k = j
+        while (k > lo && java.lang.Double.compare(keys(src(k - 1)), keys(v)) > 0) {
+          src(k) = src(k - 1)
+          k -= 1
+        }
+        src(k) = v
+        j += 1
+      }
+      lo = hi
+    }
+    var width = Run
+    while (width < n) {
+      lo = 0
+      while (lo < n) {
+        val mid = math.min(lo + width, n)
+        val hi = math.min(lo + 2 * width, n)
+        var a = lo
+        var b = mid
+        var k = lo
+        while (k < hi) {
+          // the left run wins ties: that is what keeps the sort stable
+          if (b >= hi || (a < mid && java.lang.Double.compare(keys(src(b)), keys(src(a))) >= 0)) {
+            dst(k) = src(a); a += 1
+          } else {
+            dst(k) = src(b); b += 1
+          }
+          k += 1
+        }
+        lo = hi
+      }
+      val t = src; src = dst; dst = t
+      width *= 2
+    }
+    src
   }
 
   /** A generation's rows as chunks, one per partition, in row order. */
   private def chunks(pop: Dataset[Individual]): RDD[Array[Array[Long]]] =
     pop.rdd.mapPartitions(it => Iterator.single(it.map(_.genome).toArray))
 
-  /** A partition's genomes as its one chunk, each ONEMAX-scored (op 3)
-    * and offered to `acc`. */
+  /** A partition's genomes as its one chunk, each ONEMAX-scored (op 3);
+    * the first of the fittest is offered to `acc`, once. */
   private def scored(genomes: Iterator[Array[Long]],
-      acc: BestAccumulator): Iterator[Array[Array[Long]]] =
-    Iterator.single(genomes.map { g => acc.add((g, Genome.popcount(g))); g }.toArray)
+      acc: BestAccumulator): Iterator[Array[Array[Long]]] = {
+    val chunk = genomes.toArray
+    var best: Array[Long] = null
+    var bestF = Long.MinValue
+    var i = 0
+    while (i < chunk.length) {
+      val f = Genome.popcount(chunk(i))
+      if (best == null || f > bestF) { best = chunk(i); bestF = f }
+      i += 1
+    }
+    if (best != null) acc.add((best, bestF))
+    Iterator.single(chunk)
+  }
 }
 
 /** A job that only computes its partitions: materialization's action.

@@ -15,7 +15,7 @@ class DurableSpec extends SparkSpec {
       seed = 42, dedupOffspring = true)
     // 8-bit genomes, 2048 individuals: heavy duplication guaranteed
     val g0 = Sga.evaluate(Sga.initPopulation(spark, cfg))
-    val g1 = Sga.step(g0, cfg, 0)
+    val g1 = SgaReference.step(g0, cfg, 0)
     val n = g1.count()
     val distinctGenomes = g1.dropDuplicates("genome").count()
     assert(n == distinctGenomes, "offspring must be genome-distinct")

@@ -48,6 +48,25 @@ class MixRecordSerializerSpec extends AnyFunSuite {
     assert(read(write(rs)) == plain(rs))
   }
 
+  test("a genome wider than the stream buffer round-trips; a cut inside its words fails") {
+    val rng = new Random(7)
+    // 5,000 words (40,000 B) span two 32 KiB buffers, on both sides
+    val rs = Seq((rng.nextDouble(), Genome.random(5000 * 64, rng)), (0.5, Genome.random(64, rng)))
+    val bytes = write(rs)
+    assert(bytes.length == 12 + 8 * 5000 + 12 + 8)
+    assert(read(bytes) == plain(rs))
+    Seq(12 + 8, 12 + 8 * 4096 + 3, 12 + 8 * 5000 - 1).foreach { cut =>
+      intercept[IOException](read(bytes.take(cut)))
+    }
+  }
+
+  test("fields are little-endian") {
+    val g = Array(0x0102030405060708L)
+    val bytes = write(Seq((1.0, g)))
+    val le = java.nio.ByteBuffer.wrap(bytes).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    assert(le.getDouble(0) == 1.0 && le.getInt(8) == 1 && le.getLong(12) == g(0))
+  }
+
   test("two streams concatenated read back as one (serialized records relocate)") {
     assert(serializer.supportsRelocationOfSerializedObjects)
     val (a, b) = (records(3), records(4))

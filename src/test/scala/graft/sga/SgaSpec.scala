@@ -12,7 +12,7 @@ import org.scalatest.concurrent.Eventually._
 import org.scalatest.time.SpanSugar._
 
 import graft.SparkSpec
-import graft.core.{GaConfig, Genome, Individual}
+import graft.core.{GaConfig, Genome, Individual, Tournament}
 
 class SgaSpec extends SparkSpec {
 
@@ -52,14 +52,14 @@ class SgaSpec extends SparkSpec {
 
   test("selectAndCross preserves population size") {
     val pop = Sga.evaluate(Sga.initPopulation(spark, cfg))
-    val next = Sga.selectAndCross(Sga.mix(pop, cfg, 0), cfg, 0)
+    val next = SgaReference.selectAndCross(Sga.mix(pop, cfg, 0), cfg, 0)
     assert(next.count() == cfg.popSize)
   }
 
   test("one generation raises mean fitness (selection pressure)") {
     val pop = Sga.evaluate(Sga.initPopulation(spark, cfg))
     val m0 = pop.agg(org.apache.spark.sql.functions.avg("fitness")).head().getDouble(0)
-    val next = Sga.evaluate(Sga.selectAndCross(Sga.mix(pop, cfg, 0), cfg, 0))
+    val next = Sga.evaluate(SgaReference.selectAndCross(Sga.mix(pop, cfg, 0), cfg, 0))
     val m1 = next.agg(org.apache.spark.sql.functions.avg("fitness")).head().getDouble(0)
     assert(m1 > m0, s"gen1 mean $m1 should exceed gen0 mean $m0")
   }
@@ -120,12 +120,12 @@ class SgaSpec extends SparkSpec {
     loopCfgs.foreach { c =>
       // the Dataset spelling: step + best, each generation local-checkpointed
       var pop = Sga.evaluate(Sga.initPopulation(spark, c)).localCheckpoint()
-      val history = ArrayBuffer(Sga.best(pop)._2)
+      val history = ArrayBuffer(SgaReference.best(pop)._2)
       var gen = 0
       while (!c.converged(history.last) && gen < c.maxGenerations) {
-        pop = Sga.step(pop, c, gen).localCheckpoint()
+        pop = SgaReference.step(pop, c, gen).localCheckpoint()
         gen += 1
-        history += Sga.best(pop)._2
+        history += SgaReference.best(pop)._2
       }
       // runLoop's body, which also hands back its last generation
       val (r, last) = Sga.generations(spark, c, (_, _, _) => (), None)
@@ -143,12 +143,12 @@ class SgaSpec extends SparkSpec {
       val root = Files.createTempDirectory("graft-sga-loop").toString
       def reloaded(dir: String, g: Int) = Sga.evaluate(Sga.loadGeneration(spark, dir, g))
       Sga.saveGeneration(Sga.evaluate(Sga.initPopulation(spark, c)), ref, 0)
-      val history = ArrayBuffer(Sga.best(reloaded(ref, 0))._2)
+      val history = ArrayBuffer(SgaReference.best(reloaded(ref, 0))._2)
       var gen = 0
       while (!c.converged(history.last) && gen < c.maxGenerations) {
-        Sga.saveGeneration(Sga.step(reloaded(ref, gen), c, gen), ref, gen + 1)
+        Sga.saveGeneration(SgaReference.step(reloaded(ref, gen), c, gen), ref, gen + 1)
         gen += 1
-        history += Sga.best(reloaded(ref, gen))._2
+        history += SgaReference.best(reloaded(ref, gen))._2
       }
       val r = Sga.runLoop(spark, c, durableRoot = Some(root))
       assert(r.history == history.toSeq, s"history diverged for $c")
@@ -177,6 +177,29 @@ class SgaSpec extends SparkSpec {
       assert(mixing.head.keyOrdering.isEmpty, "the exchange sorts records by key again")
       assert(mixing.head.serializer.isInstanceOf[MixRecordSerializer])
     } finally last.unpersist(blocking = true)
+  }
+
+  test("breed's reduce side sorts by mixing key stably: tied keys keep their fetch order") {
+    val byKey = Ordering.Double.TotalOrdering
+    val rng = new java.util.Random(5)
+    // few distinct keys (signed zeros among them) make long runs of ties;
+    // the sizes cross the sort's 32-record runs and its merge widths
+    val levels = Array(-0.0, 0.0, 0.25, 0.5, 0.75)
+    Seq(0, 1, 31, 32, 33, 100, 1000).foreach { n =>
+      val keys = Array.fill(n)(levels(rng.nextInt(levels.length)))
+      assert(Sga.mixOrder(keys).toSeq == (0 until n).sortBy(keys(_))(byKey), s"n=$n")
+    }
+    val records = Seq.fill(300)((levels(rng.nextInt(levels.length)), Genome.random(128, rng)))
+    val (rngSeed, s, p) = (77L, 5, 2)
+    val acc = new BestAccumulator
+    val bred = new Sga.Breed(rngSeed, s, acc)(p, records.iterator).toSeq.flatten
+    // the fetch order's stable sort, then the tournament on java.util.Random
+    val parents = records.sortBy(_._1)(byKey).map { case (_, g) => Individual(g, Genome.popcount(g)) }
+    val expected = Tournament.selectAndCross(parents.iterator, s, new java.util.Random(rngSeed + p))
+      .map(_.genome.toSeq).toSeq
+    assert(bred.map(_.toSeq) == expected)
+    assert(acc.value._2 == bred.map(Genome.popcount).max)
+    assert(acc.value._1 eq bred.find(g => Genome.popcount(g) == acc.value._2).get)
   }
 
   test("runLoop runs one Spark job per generation, plus one for generation 0") {
