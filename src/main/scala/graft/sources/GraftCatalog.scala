@@ -1466,9 +1466,10 @@ private[sources] class GraftRowLevelOperation(table: GraftSqlTable,
 }
 
 /** The write half of a SQL row-level operation: Spark's OWN parquet
-  * writer (delegated `ParquetTable` write — distributed tasks, the
-  * stock committer) produces the replacement files into a fresh
-  * INVISIBLE commit dir, and the driver-side `commit` publishes it
+  * writer (delegated `ParquetTable` write — distributed tasks, writing
+  * in place through [[ManifestPublishedCommitter]]) produces the
+  * replacement files into a fresh INVISIBLE commit dir, and the
+  * driver-side `commit` publishes it
   * through [[VersionedTable.publishDir]] — constraint validation,
   * stats harvest, atomic manifest rename. The replacement covers
   * exactly the commit dirs the operation's scan read
@@ -1577,7 +1578,8 @@ private[sources] class ReplaceSnapshotWrite(root: String,
         java.util.Collections.singletonMap("path", dataDir.toString)),
       Seq(dataDir.toString), Some(info.schema()),
       classOf[ParquetFileFormat])
-    val delegate = staging.newWriteBuilder(info).build().toBatch
+    val delegate = staging.newWriteBuilder(
+      ManifestPublishedCommitter.withWriterOptions(spark, info)).build().toBatch
     new BatchWrite {
       // group-based ReplaceData prepends a __row_operation column to
       // every row, and with no metadata columns declared Spark's exec
@@ -1602,17 +1604,22 @@ private[sources] class ReplaceSnapshotWrite(root: String,
         // anything else publishes. Unknown row counts conservatively
         // count as written — an empty extra commit dir is harmless,
         // a dropped insert is corruption.
+        // The harvested `#file:` lines also go to publishDir, which
+        // would otherwise read every staged footer a second time.
+        val staged = fs.exists(dataDir)
+        val stagedStats: Option[Seq[String]] =
+          if (!staged) None
+          else scala.util.Try(DataSkipping.statsLines(
+            spark.sparkContext.hadoopConfiguration, dataDir, commitName))
+            .toOption
         val stagedHasRows: Boolean =
-          fs.exists(dataDir) && {
-            val stats = scala.util.Try(DataSkipping.statsLines(
-              spark.sparkContext.hadoopConfiguration, dataDir, commitName)
-              .flatMap(l => DataSkipping.parseLine(l.stripPrefix("#file:"))))
-            stats match {
-              case scala.util.Success(fsz) => fsz.exists(_.rows != 0L)
-              case scala.util.Failure(_) => fs.listStatus(dataDir)
-                .exists(_.getPath.getName.endsWith(".parquet"))
-            }
-          }
+          staged && (stagedStats match {
+            case Some(lines) => lines
+              .flatMap(l => DataSkipping.parseLine(l.stripPrefix("#file:")))
+              .exists(_.rows != 0L)
+            case None => fs.listStatus(dataDir)
+              .exists(_.getPath.getName.endsWith(".parquet"))
+          })
         // The required distribution SHOULD have laid the staged files
         // out bucket-pure — but the mark must never rest on "should":
         // Spark may legally collapse the write's repartition into an
@@ -1667,7 +1674,8 @@ private[sources] class ReplaceSnapshotWrite(root: String,
             // marked only because the staged files were VERIFIED
             // bucket-pure above — the SPJ claim survives the
             // statement; the (cheap-to-lose) order claim does not
-            bucketedNew = bucketPure)
+            bucketedNew = bucketPure,
+            stagedStatsLines = stagedStats)
         }
       }
       override def abort(msgs: Array[WriterCommitMessage]): Unit = {

@@ -36,7 +36,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Commit protocol (optimistic concurrency):
   *  1. write the new version's data files to a fresh commit dir —
-  *     invisible to every reader (no manifest references it);
+  *     invisible to every reader (no manifest references it). The
+  *     tasks write their files straight into it
+  *     ([[ManifestPublishedCommitter]]): no staging dirs, task or job
+  *     renames or `_SUCCESS` marker, since this dir needs no
+  *     publishing of its own;
   *  2. write the manifest body to `_manifests/.tmp-{uuid}`;
   *  3. RENAME it to `v{N+1}.json`. The rename is the commit point:
   *     a reader either resolves v{N} (old complete snapshot) or
@@ -191,14 +195,17 @@ object VersionedTable {
   private[sources] val manifestLookupCount =
     new java.util.concurrent.atomic.AtomicLong()
 
-  /** Drop every cached manifest/stats/schema entry of `root` — called
-    * by [[vacuum]] after it deletes manifests, so the caches can never
-    * outlive the files they mirror. */
+  /** Drop every cached manifest/stats/schema/envelope/NDV entry of
+    * `root` — called by [[vacuum]] after it deletes manifests, and by
+    * [[init]] and DROP for a new table incarnation at the same root,
+    * so the caches can never outlive the files they mirror. */
   private[sources] def invalidateMetaCaches(root: String): Unit = {
     val key = new Path(root).toString
     manifestCache.keys.filter(_._1 == key).foreach(manifestCache.remove)
     statsCache.keys.filter(_._1 == key).foreach(statsCache.remove)
     schemaCache.keys.filter(_._1 == key).foreach(schemaCache.remove)
+    envelopeCache.keys.filter(_._1 == key).foreach(envelopeCache.remove)
+    ndvCache.keys.filter(_._1 == key).foreach(ndvCache.remove)
   }
 
   private def manifestLines(spark: SparkSession, root: String,
@@ -1902,7 +1909,8 @@ object VersionedTable {
         keyedDiff(oldDf, newDf, schema.fieldNames.toSeq, key)
       }
     val name = s"v$next-${java.util.UUID.randomUUID}"
-    changes.write.parquet(new Path(changesDir(root), name).toString)
+    ManifestPublishedCommitter.writeParquet(changes,
+      new Path(changesDir(root), name))
     name
   }
 
@@ -1947,9 +1955,9 @@ object VersionedTable {
           .sortWithinPartitions(key)
         val s2 = org.apache.spark.sql.graft.PlanBridge.cloneSession(spark)
         s2.conf.set("spark.sql.adaptive.enabled", "false")
-        org.apache.spark.sql.graft.PlanBridge
-          .ofRows(s2, bucketed.queryExecution.logical)
-          .write.parquet(dataDir.toString)
+        ManifestPublishedCommitter.writeParquet(
+          org.apache.spark.sql.graft.PlanBridge
+            .ofRows(s2, bucketed.queryExecution.logical), dataDir)
         true
       case None =>
         // cluster pin: route the write through the range-cluster
@@ -1990,9 +1998,10 @@ object VersionedTable {
             val out =
               if (zmode) clusterZ(df, cols.head, cols.last, n)
               else cluster(df, cols, n)
-            out.write.parquet(dataDir.toString)
+            ManifestPublishedCommitter.writeParquet(out, dataDir)
           case None =>
-            df.write.parquet(dataDir.toString) // invisible until manifest lands
+            // invisible until the manifest lands
+            ManifestPublishedCommitter.writeParquet(df, dataDir)
         }
         false
     }
@@ -2017,7 +2026,8 @@ object VersionedTable {
       metaLines: Seq[String], carryStatsLines: Seq[String] = Seq.empty,
       keepDirOnConflict: Boolean = false,
       bucketedNew: Boolean = false,
-      sortedNew: Boolean = false): Int = {
+      sortedNew: Boolean = false,
+      stagedStatsLines: Option[Seq[String]] = None): Int = {
     val next = expectedVersion + 1
     val dataDir = new Path(new Path(root, "data"), commitName)
     val fs = fsOf(spark, dataDir)
@@ -2158,10 +2168,13 @@ object VersionedTable {
     // file-skipping stats for the files JUST written, harvested from
     // their parquet footers (metadata-only reads — no second data
     // pass) and committed ATOMICALLY with the manifest that makes the
-    // files visible. Best-effort: a commit never fails over stats.
-    val statsLines = scala.util.Try(DataSkipping.statsLines(
-      spark.sparkContext.hadoopConfiguration, dataDir, commitName))
-      .getOrElse(Seq.empty)
+    // files visible. Best-effort: a commit never fails over stats. A
+    // caller that already harvested the staged dir hands its lines in
+    // (`stagedStatsLines`), so no footer is read twice.
+    val statsLines = stagedStatsLines.getOrElse(
+      scala.util.Try(DataSkipping.statsLines(
+        spark.sparkContext.hadoopConfiguration, dataDir, commitName))
+        .getOrElse(Seq.empty))
     // SKETCH MAINTENANCE (NDV + quantiles + blooms, when their pins
     // are active): carry the surviving dirs' lines verbatim, sketch
     // ONLY the rows just written — ALL pinned families in ONE pass

@@ -719,4 +719,24 @@ class VersionedTableSpec extends SparkSpec {
       s"no reclaimable bytes from a dir that is already gone: " +
         s"${sched.toSeq}")
   }
+
+  test("a re-init at the same root serves the new table's envelopes " +
+    "and NDV, not the dead table's") {
+    val root = freshRoot()
+    VersionedTable.init(spark, root,
+      spark.range(0, 100).select(col("id"), col("id").as("k")))
+    VersionedTable.enableNdvStats(spark, root, Seq("k"))
+    val env0 = VersionedTable.columnEnvelopes(spark, root)("id")
+    assert(env0.min.contains(0L) && env0.max.contains(99L))
+    assert(VersionedTable.tableNdv(spark, root)("k") > 50L)
+    val dir = new org.apache.hadoop.fs.Path(root)
+    dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .delete(dir, true)
+    VersionedTable.init(spark, root, spark.range(1000, 1100)
+      .select(col("id"), (col("id") % 7).as("k")))
+    VersionedTable.enableNdvStats(spark, root, Seq("k"))
+    val env1 = VersionedTable.columnEnvelopes(spark, root)("id")
+    assert(env1.min.contains(1000L) && env1.max.contains(1099L), s"$env1")
+    assert(VersionedTable.tableNdv(spark, root)("k") < 20L)
+  }
 }
