@@ -18,10 +18,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // planner extension: pure range-condition joins become binned
     // equi-joins (plans.RangeJoinRewrite) instead of nested loops
     e.injectOptimizerRule(_ => graft.plans.RangeJoinRewrite())
-    // table-format extension: filters over graft-versioned DSv2 scans
-    // prune whole files via the manifest's #file: stats envelopes
-    // before the parquet scan is planned (plans.VersionedSkipRule)
-    e.injectOptimizerRule(_ => graft.plans.VersionedSkipRule())
     // metadata-only COUNT(*): an unfiltered global count over a
     // graft-versioned scan answers from the manifest row counts
     // (plans.VersionedCountRule)

@@ -303,9 +303,9 @@ object BloomSkipping {
   }
 
   /** ONE file's may-match decision under `pred` — the sidecar lookup
-    * plus [[mayMatch]], shared by the path reader's `prunedPaths` and
-    * the SQL row-level operation's group pruning so the two can never
-    * prune differently. `filePath` is `<dir>/<file>` (manifest-stat
+    * plus [[mayMatch]], called only by
+    * [[VersionedTable.classifyFiles]], so every read and rewrite
+    * prunes alike. `filePath` is `<dir>/<file>` (manifest-stat
     * form); conservative on any missing coverage. */
   def fileMayMatch(spark: SparkSession, dataRoot: Path, dir: String,
       filePath: String, pred: Expression): Boolean = {

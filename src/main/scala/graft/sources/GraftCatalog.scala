@@ -902,12 +902,11 @@ private[sources] class GraftSqlTable(ident: String, root: String,
 
   private lazy val inner: ParquetTable = {
     val v = pinnedVersion
-    val dirs = VersionedTable.dataDirs(spark, root, Some(v))
     // tableSchema resolves driver-side (manifest pin, else one footer)
     // so a catalog table load never pays ParquetTable's distributed
     // schema-inference job — every SQL statement loads the table anew
     ParquetTable(s"graft $ident", spark, CaseInsensitiveStringMap.empty(),
-      dirs,
+      VersionedTable.dataDirs(spark, root, Some(v)),
       userSpecifiedSchema = VersionedTable.tableSchema(spark, root, v),
       fallbackFileFormat = classOf[ParquetFileFormat])
   }
@@ -1053,10 +1052,8 @@ private[sources] class GraftSqlTable(ident: String, root: String,
 
   override def newScanBuilder(options: CaseInsensitiveStringMap)
       : ScanBuilder =
-    new org.apache.spark.sql.graft.DirAwareScanBuilder(spark, root,
-      pinnedVersion, inner.schema,
-      VersionedTable.readManifest(spark, root, pinnedVersion),
-      inner.newScanBuilder(options), options,
+    SnapshotStatsTable.scanBuilder(spark, root, pinnedVersion, inner,
+      options,
       // `spark.readStream.table("graft.t")`: snapshot-then-tail via
       // the same micro-batch stream the path connector uses; a
       // time-traveled table is a frozen snapshot — nothing to stream
@@ -1282,16 +1279,17 @@ private[sources] class GraftSqlTable(ident: String, root: String,
 
 /** One SQL row-level statement (UPDATE / MERGE INTO / fallback
   * DELETE) as a GROUP-BASED copy-on-write operation whose groups are
-  * the snapshot's COMMIT DIRS — the same granularity (and the same
-  * `DataSkipping.mayMatch` evaluator) as the programmatic stats-pruned
-  * [[VersionedTable.update]]/`delete`, reached through the public
-  * connector seam: Spark's `GroupBasedRowLevelOperationScanPlanning`
-  * pushes the statement condition's translatable conjuncts into the
-  * operation's ScanBuilder, the builder uses them ONLY to classify
-  * commit dirs (a dir whose manifest-stats envelopes PROVE no row can
-  * match is never scanned — and therefore never rewritten), and the
-  * write replaces exactly the scanned dirs while the pruned ones
-  * carry by identity, stats lines and all. Every pushed filter is
+  * the snapshot's manifest references — the same granularity (and the
+  * same [[VersionedTable.classifyFiles]] classifier) as the
+  * programmatic stats-pruned [[VersionedTable.update]]/`delete`,
+  * reached through the public connector seam: Spark's
+  * `GroupBasedRowLevelOperationScanPlanning` pushes the statement
+  * condition's translatable conjuncts into the operation's
+  * ScanBuilder, the builder uses them ONLY to classify files (a file
+  * whose manifest stats PROVE no row can match is never scanned — and
+  * therefore never rewritten), and the write replaces exactly the
+  * scanned references while the pruned ones carry by identity, stats
+  * lines and all. Every pushed filter is
   * returned as residual, so Spark re-evaluates the full condition on
   * the scanned rows — pruning is file-group-level and
   * answer-invisible, never row-level.
@@ -1377,39 +1375,10 @@ private[sources] class GraftRowLevelOperation(table: GraftSqlTable,
           VersionedTable.resolveCondition(spark, table.snapshotSchema,
             cond) match {
             case Some(pred) =>
-              val byDir = VersionedTable.statsByDir(spark, root,
-                Some(baseVersion))
-              // bloom coverage ANDs with the envelope check for
-              // equality predicates on pinned columns (see
-              // BloomSkipping) — a dir survives only if some file
-              // passes BOTH layers
-              val bloomPin = VersionedTable
-                .bloomColumns(spark, root, Some(baseVersion))
-                .filter(BloomSkipping.relevant(pred, _))
-              val dataRoot = new org.apache.hadoop.fs.Path(root, "data")
-              def bloomOk(dir: String, filePath: String): Boolean =
-                bloomPin.isEmpty || BloomSkipping.fileMayMatch(spark,
-                  dataRoot, dir, filePath, pred)
-              // FILE-GRANULAR, same discipline as the programmatic
-              // rewriteWhere: a stats-covered dir where only some
-              // files may match splits — clean files carry as
-              // in-place file references, only may-match files scan
-              // and rewrite (SQL DELETE/UPDATE at O(matching files))
-              val classified = allDirs.map { ref =>
-                VersionedTable.statsForRef(byDir, ref) match {
-                  case Some(files) =>
-                    val (hit, clean) = files.partition(f =>
-                      DataSkipping.mayMatch(f, pred) &&
-                        bloomOk(VersionedTable.refDir(ref), f.path))
-                    if (hit.isEmpty) (Seq.empty[String], Seq(ref))
-                    else if (clean.isEmpty) (Seq(ref), Seq.empty[String])
-                    else (hit.map(_.path), clean.map(_.path))
-                  case None => // uncovered: conservatively scanned
-                    (Seq(ref), Seq.empty[String])
-                }
-              }
-              affectedDirs = classified.flatMap(_._1)
-              carriedDirs = classified.flatMap(_._2)
+              val c = VersionedTable.classifyFiles(spark, root,
+                baseVersion, pred)
+              affectedDirs = c.mayMatch
+              carriedDirs = c.noMatch
               pruningFilters = filters
             case None => ()
           }
@@ -1446,15 +1415,13 @@ private[sources] class GraftRowLevelOperation(table: GraftSqlTable,
               carriedDirs = entries.filterNot(keep.contains)
               affectedDirs = entries.filter(keep.contains)
             })
-        else {
-          val dataRoot = new Path(root, "data")
-          val paths = affectedDirs.map(d => new Path(dataRoot, d).toString)
+        else
           ParquetTable(s"graft-rowlevel $root", spark,
-            CaseInsensitiveStringMap.empty(), paths,
+            CaseInsensitiveStringMap.empty(),
+            VersionedTable.dataPaths(root, affectedDirs),
             userSpecifiedSchema = Some(table.snapshotSchema),
             fallbackFileFormat = classOf[ParquetFileFormat])
             .newScanBuilder(CaseInsensitiveStringMap.empty()).build()
-        }
     }
 
   override def newWriteBuilder(winfo: LogicalWriteInfo): WriteBuilder =

@@ -395,8 +395,15 @@ object VersionedTable {
       version: Option[Int] = None): Seq[String] = {
     val v = version.getOrElse(latestVersion(spark, root))
     require(v >= 0, s"table $root has no committed version")
-    readManifest(spark, root, v)
-      .map(d => new Path(new Path(root, "data"), d).toString)
+    dataPaths(root, readManifest(spark, root, v))
+  }
+
+  /** Manifest references (commit dirs or `dir/file.parquet`) as paths
+    * under the table's data root. */
+  private[graft] def dataPaths(root: String, refs: Seq[String])
+      : Seq[String] = {
+    val dataRoot = new Path(root, "data")
+    refs.map(r => new Path(dataRoot, r).toString)
   }
 
   /** The `#schema:` pin of version `v`'s manifest, if any — present
@@ -452,7 +459,8 @@ object VersionedTable {
   // nullability) — replicate Spark's private StructType.asNullable
   // exactly so the driver-side schema is indistinguishable from the
   // inferred one
-  private def forceNullable(dt: org.apache.spark.sql.types.DataType)
+  private[sources] def forceNullable(
+      dt: org.apache.spark.sql.types.DataType)
       : org.apache.spark.sql.types.DataType = {
     import org.apache.spark.sql.types._
     dt match {
@@ -670,7 +678,7 @@ object VersionedTable {
     }
     if (small.size < 2) return base
     val dataRoot = new Path(root, "data")
-    val schema = cheapSchema(spark, root, base)
+    val schema = tableSchema(spark, root, base)
       .getOrElse(read(spark, root, Some(base)).schema)
     val folded = spark.read.schema(schema).parquet(
       small.map(d => new Path(dataRoot, d).toString): _*)
@@ -711,7 +719,7 @@ object VersionedTable {
     val (fileRefs, wholeDirs) = refs.partition(refIsFile)
     if (fileRefs.size < minRefs) return base
     val dataRoot = new Path(root, "data")
-    val schema = cheapSchema(spark, root, base)
+    val schema = tableSchema(spark, root, base)
       .getOrElse(read(spark, root, Some(base)).schema)
     val folded = spark.read.schema(schema).parquet(
       fileRefs.map(r => new Path(dataRoot, r).toString): _*)
@@ -1290,7 +1298,7 @@ object VersionedTable {
     // marker alone, no content diff, no exchange planned
     if (toVersion == fromVersion + 1 &&
       commitOp(spark, root, toVersion).exists(DataEquivalentOps)) {
-      val s = cheapSchema(spark, root, toVersion)
+      val s = tableSchema(spark, root, toVersion)
         .getOrElse(read(spark, root, Some(toVersion)).schema)
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s)
@@ -1548,7 +1556,7 @@ object VersionedTable {
     require(clusterSpec(spark, root, Some(base)).isEmpty,
       s"$root is cluster-pinned — one physical layout authority per " +
         "table; disableClustering first")
-    val schema = cheapSchema(spark, root, base)
+    val schema = tableSchema(spark, root, base)
       .getOrElse(read(spark, root, Some(base)).schema)
     require(schema.fieldNames.exists(_.equalsIgnoreCase(key)),
       s"bucket key '$key' not in table schema ${schema.simpleString}")
@@ -1652,7 +1660,7 @@ object VersionedTable {
       s"clustering already enabled on $root " +
         s"(${clusterSpec(spark, root, Some(base)).get.mkString(",")}) — " +
         "disableClustering first")
-    val schema = cheapSchema(spark, root, base)
+    val schema = tableSchema(spark, root, base)
       .getOrElse(read(spark, root, Some(base)).schema)
     val missing = cols.filterNot(c =>
       schema.fieldNames.exists(_.equalsIgnoreCase(c)))
@@ -1825,7 +1833,7 @@ object VersionedTable {
   private[sources] def readChangeFile(spark: SparkSession, root: String,
       v: Int): Option[DataFrame] =
     changeFilePathIfExists(spark, root, v).map { p =>
-      val s = cheapSchema(spark, root, v)
+      val s = tableSchema(spark, root, v)
         .getOrElse(read(spark, root, Some(v)).schema)
       val feedSchema = org.apache.spark.sql.types.StructType(s.fields :+
         org.apache.spark.sql.types.StructField("change_kind",
@@ -1863,7 +1871,7 @@ object VersionedTable {
     import org.apache.spark.sql.types.StructType
     def shape(s: StructType) =
       s.fields.toSeq.map(f => (f.name.toLowerCase, f.dataType.sql))
-    val oldSchema = cheapSchema(spark, root, next - 1)
+    val oldSchema = tableSchema(spark, root, next - 1)
       .getOrElse(read(spark, root, Some(next - 1)).schema)
     val schema: StructType = metaLines.collectFirst {
       case l if l.startsWith("#schema:") =>
@@ -2258,7 +2266,7 @@ object VersionedTable {
       if (refSketchTargets.isEmpty) (Seq.empty, Seq.empty)
       else scala.util.Try {
         val dataRoot = new Path(root, "data")
-        val schema = cheapSchema(spark, root, expectedVersion)
+        val schema = tableSchema(spark, root, expectedVersion)
           .getOrElse(spark.read.parquet(refSketchTargets
             .map(r => new Path(dataRoot, r).toString): _*).schema)
         val df = spark.read.schema(schema).parquet(refSketchTargets
@@ -2719,42 +2727,81 @@ object VersionedTable {
         .groupBy(_.path.takeWhile(_ != '/'))))
   }
 
+  /** [[classifyFiles]]'s answer: the manifest references a scan
+    * must read (`mayMatch`), the references whose stats prove no row
+    * can match (`noMatch`), and (prunedFiles, coveredFiles) for
+    * observability. */
+  final case class FileClasses(mayMatch: Seq[String],
+      noMatch: Seq[String], pruned: Int, covered: Int)
+
+  /** Which files of version `v` may hold a row satisfying `pred` (a
+    * RESOLVED catalyst predicate): the one file classifier behind
+    * every pruned read ([[readWhere]], the DSv2 scan builder of the
+    * path connector and the catalog) and every copy-on-write rewrite
+    * (programmatic [[update]]/[[delete]], SQL row-level operations).
+    *
+    * A file MAY match when its `#file:` envelope passes
+    * [[DataSkipping.mayMatch]] and — only when the version carries a
+    * bloom pin the predicate can use ([[BloomSkipping.relevant]]) —
+    * its bloom passes [[BloomSkipping.fileMayMatch]]. Blooms AND with
+    * the envelope: random hashes span every envelope (min/max prunes
+    * nothing), but only the file whose filter saw the value may
+    * match — sound because blooms have no false negatives. Entries
+    * without stats coverage are conservatively may-match, so
+    * correctness never rests on the envelopes.
+    *
+    * CLASSIFICATION IS FILE-GRANULAR: a stats-covered entry whose
+    * files all may match stays whole, one whose files all prove clean
+    * goes whole to `noMatch`, and an entry where only SOME files may
+    * match splits into `dir/file.parquet` references on both sides.
+    * A rewrite then carries the clean files as in-place file
+    * references (zero bytes copied) and reads only the may-match
+    * files: on the 1-dir/16-file shape a large append produces, a
+    * point delete rewrites the ≤3 files the blooms implicate, not
+    * all 16. The split is sound because `#file:` stats lines are
+    * complete per covered dir (an unlisted matching file would have
+    * mis-carried the dir). Stats are version `v`'s own, so a pinned
+    * time-travel read classifies exactly as it did when `v` was
+    * latest. */
+  private[graft] def classifyFiles(spark: SparkSession, root: String,
+      v: Int, pred: org.apache.spark.sql.catalyst.expressions.Expression)
+      : FileClasses = {
+    val byDir = statsByDir(spark, root, Some(v))
+    val dataRoot = new Path(root, "data")
+    val bloomPin = bloomColumns(spark, root, Some(v))
+      .filter(BloomSkipping.relevant(pred, _))
+    var covered = 0
+    var pruned = 0
+    val classes = readManifest(spark, root, v).map { ref =>
+      statsForRef(byDir, ref) match {
+        case None => (Seq(ref), Seq.empty[String])
+        case Some(files) =>
+          val (hit, clean) = files.partition(f =>
+            DataSkipping.mayMatch(f, pred) && (bloomPin.isEmpty ||
+              BloomSkipping.fileMayMatch(spark, dataRoot, refDir(ref),
+                f.path, pred)))
+          covered += files.size
+          pruned += clean.size
+          if (clean.isEmpty) (Seq(ref), Seq.empty[String])
+          else if (hit.isEmpty) (Seq.empty[String], Seq(ref))
+          else (hit.map(_.path), clean.map(_.path))
+      }
+    }
+    FileClasses(classes.flatMap(_._1), classes.flatMap(_._2), pruned,
+      covered)
+  }
+
   /** The file-skipped path list for a scan of `version` under
-    * `pred` (a RESOLVED catalyst predicate): commit dirs covered by
-    * manifest stats shrink to the files that MAY satisfy the
-    * predicate; uncovered dirs pass through whole. Returns the paths
-    * plus (prunedFiles, coveredFiles) for observability. Skipping is
-    * conservative — the scan over the returned paths, re-filtered by
-    * `pred`, equals the filtered full scan. */
+    * `pred` (a RESOLVED catalyst predicate): [[classifyFiles]]'s
+    * may-match references as paths, plus (prunedFiles, coveredFiles).
+    * The scan over the returned paths, re-filtered by `pred`, equals
+    * the filtered full scan. */
   def prunedPaths(spark: SparkSession, root: String,
       pred: org.apache.spark.sql.catalyst.expressions.Expression,
       version: Option[Int] = None): (Seq[String], Int, Int) = {
-    val v = version.getOrElse(latestVersion(spark, root))
-    val byDir = statsByDir(spark, root, Some(v))
-    val dataRoot = new Path(root, "data")
-    // bloom pruning ANDs with the envelope check — but only when the
-    // pin exists AND the predicate holds an equality on a pinned
-    // column (the `relevant` guard keeps sidecar reads off plans
-    // that cannot use them)
-    val bloomPin = bloomColumns(spark, root, Some(v))
-      .filter(BloomSkipping.relevant(pred, _))
-    def bloomOk(dir: String, filePath: String): Boolean =
-      bloomPin.isEmpty ||
-        BloomSkipping.fileMayMatch(spark, dataRoot, dir, filePath, pred)
-    var covered = 0
-    var pruned = 0
-    val paths = readManifest(spark, root, v).flatMap { ref =>
-      statsForRef(byDir, ref) match {
-        case None => Seq(new Path(dataRoot, ref).toString)
-        case Some(files) =>
-          covered += files.size
-          val keep = files.filter(f =>
-            DataSkipping.mayMatch(f, pred) && bloomOk(refDir(ref), f.path))
-          pruned += files.size - keep.size
-          keep.map(f => new Path(dataRoot, f.path).toString)
-      }
-    }
-    (paths, pruned, covered)
+    val c = classifyFiles(spark, root,
+      version.getOrElse(latestVersion(spark, root)), pred)
+    (dataPaths(root, c.mayMatch), c.pruned, c.covered)
   }
 
   /** Range-cluster a batch on `cols` into `nFiles` sorted files —
@@ -2842,10 +2889,17 @@ object VersionedTable {
   def rowCount(spark: SparkSession, root: String,
       version: Option[Int] = None): Option[Long] = {
     val v = version.getOrElse(latestVersion(spark, root))
-    if (v < 0) return None
+    if (v < 0) None
+    else rowCountOf(spark, root, v, readManifest(spark, root, v))
+  }
+
+  /** The exact row count of `refs` — references of version `v`, or
+    * files inside them — from `#file:` stats alone. None when any
+    * ref lacks stats. */
+  def rowCountOf(spark: SparkSession, root: String, v: Int,
+      refs: Seq[String]): Option[Long] = {
     val byDir = statsByDir(spark, root, Some(v))
-    val dirs = readManifest(spark, root, v)
-    val counts = dirs.map(d => statsForRef(byDir, d) match {
+    val counts = refs.map(d => statsForRef(byDir, d) match {
       case Some(files) if files.forall(_.rows >= 0) =>
         Some(files.map(_.rows).sum)
       case _ => None
@@ -2877,15 +2931,16 @@ object VersionedTable {
     val v = version.getOrElse(latestVersion(spark, root))
     if (v < 0) return Map.empty
     envelopeCache.getOrElseUpdate((new Path(root).toString, v),
-      computeColumnEnvelopes(spark, root, v))
+      columnEnvelopesOf(spark, root, v, readManifest(spark, root, v)))
   }
 
-  private def computeColumnEnvelopes(spark: SparkSession, root: String,
-      v: Int): Map[String, DataSkipping.ColStats] = {
+  /** [[columnEnvelopes]] folded over `refs` alone — references of
+    * version `v`, or files inside them (a pruned scan's survivors). */
+  def columnEnvelopesOf(spark: SparkSession, root: String, v: Int,
+      refs: Seq[String]): Map[String, DataSkipping.ColStats] = {
     val byDir = statsByDir(spark, root, Some(v))
-    val dirs = readManifest(spark, root, v)
-    val perRef = dirs.map(d => statsForRef(byDir, d))
-    if (dirs.isEmpty || perRef.exists(_.isEmpty)) return Map.empty
+    val perRef = refs.map(d => statsForRef(byDir, d))
+    if (refs.isEmpty || perRef.exists(_.isEmpty)) return Map.empty
     val files = perRef.flatMap(_.get).filter(_.rows != 0L)
     if (files.isEmpty) return Map.empty
     if (files.exists(_.rows < 0)) return Map.empty
@@ -3319,7 +3374,7 @@ object VersionedTable {
   }
 
   /** (prunedFiles, coveredFiles) a skipped scan under `condition`
-    * would see — the [[prunedPaths]] counters behind a public Column
+    * would see — the [[classifyFiles]] counters behind a public Column
     * spelling, for gates/monitoring. None when the table carries no
     * usable schema or the predicate doesn't resolve. */
   def pruneCounts(spark: SparkSession, root: String,
@@ -3328,12 +3383,10 @@ object VersionedTable {
     val v = version.getOrElse(latestVersion(spark, root))
     if (v < 0) return None
     for {
-      s <- cheapSchema(spark, root, v)
+      s <- tableSchema(spark, root, v)
       pred <- resolveCondition(spark, s, condition)
-    } yield {
-      val (_, pruned, covered) = prunedPaths(spark, root, pred, Some(v))
-      (pruned, covered)
-    }
+      c = classifyFiles(spark, root, v, pred)
+    } yield (c.pruned, c.covered)
   }
 
   /** The bloom pin of version `v`, if any. */
@@ -3489,16 +3542,6 @@ object VersionedTable {
     })
   }
 
-  /** Version `v`'s schema resolved at O(manifest) cost: the
-    * `#schema:` pin when the table evolved, else ONE sampled file
-    * footer (files within a non-evolved table share their writer's
-    * schema). None when the manifest carries no stats to sample from —
-    * callers fall back to a full `read(...).schema`, whose file-index
-    * listing walks every commit dir. */
-  private def cheapSchema(spark: SparkSession, root: String,
-      v: Int): Option[org.apache.spark.sql.types.StructType] =
-    tableSchema(spark, root, v)
-
   /** Resolve a user-facing filter `Column` into a catalyst predicate
     * against `schema` WITHOUT building (and file-listing) the real
     * snapshot frame: analyze the filter over an empty frame carrying
@@ -3516,39 +3559,30 @@ object VersionedTable {
     }
   }
 
-  /** Snapshot read under a filter WITH manifest-level file skipping —
-    * the programmatic spelling of the `VersionedSkipRule` optimizer
-    * path. Exactly `read(...).filter(condition)`, but files whose
-    * stats envelope PROVES no row can match are never opened (and at
-    * 10^5+ files, never even footer-listed). The residual filter
-    * stays on the plan, so unsupported predicate shapes degrade to a
-    * plain filtered scan, never to wrong answers. */
+  /** Snapshot read under a filter WITH manifest-level file skipping:
+    * exactly `read(...).filter(condition)`, but files whose stats
+    * PROVE no row can match ([[classifyFiles]]) are never opened
+    * (and at 10^5+ files, never even footer-listed). The residual
+    * filter stays on the plan, so unsupported predicate shapes
+    * degrade to a plain filtered scan, never to wrong answers. */
   def readWhere(spark: SparkSession, root: String,
       condition: org.apache.spark.sql.Column,
       version: Option[Int] = None): DataFrame = {
     val v = version.getOrElse(latestVersion(spark, root))
-    def fallback = read(spark, root, Some(v)).filter(condition)
-    val byDir = statsByDir(spark, root, Some(v))
-    if (byDir.isEmpty) return fallback
     // The planning path must cost O(manifest), NEVER O(table): the
-    // first cut of this method resolved the Column by building the
-    // full snapshot frame, whose file-index listing walks every
-    // commit dir — at scale that listing IS the cost skipping exists
-    // to avoid (measured: readWhere slower than the full filter scan
-    // at 50 commits). So the predicate resolves against an EMPTY
-    // frame carrying the snapshot schema (cheapSchema), and the full
+    // predicate resolves against an EMPTY frame carrying the snapshot
+    // schema, because building the full snapshot frame would list
+    // every commit dir — the cost skipping exists to avoid. The full
     // listing happens only on the no-pruning fallback.
-    cheapSchema(spark, root, v) match {
-      case None => fallback
-      case Some(s) =>
-        resolveCondition(spark, s, condition) match {
-          case None => fallback
-          case Some(pred) =>
-            val (paths, prunedN, _) = prunedPaths(spark, root, pred, Some(v))
-            if (prunedN == 0) fallback
-            else spark.read.schema(s).parquet(paths: _*).filter(condition)
-        }
-    }
+    val pruned =
+      if (statsByDir(spark, root, Some(v)).isEmpty) None
+      else for {
+        s <- tableSchema(spark, root, v)
+        pred <- resolveCondition(spark, s, condition)
+        c = classifyFiles(spark, root, v, pred)
+        if c.pruned > 0
+      } yield spark.read.schema(s).parquet(dataPaths(root, c.mayMatch): _*)
+    pruned.getOrElse(read(spark, root, Some(v))).filter(condition)
   }
 
   /** Row-level DELETE, copy-on-write: remove the rows where
@@ -3630,70 +3664,26 @@ object VersionedTable {
     }
   }
 
-  // the shared copy-on-write core of delete/update: classify commit
-  // dirs by the manifest stats, rewrite ONLY the may-match dirs
-  // through `transform`, carry the rest (dirs + stats) verbatim
+  // the shared copy-on-write core of delete/update: classify the
+  // manifest's files (classifyFiles), rewrite ONLY the may-match ones
+  // through `transform`, carry the rest (refs + stats) verbatim
   private def rewriteWhere(spark: SparkSession, root: String,
       condition: org.apache.spark.sql.Column, op: String)(
       transform: (DataFrame, org.apache.spark.sql.Column) => DataFrame)
       : Int = {
     val base = latestVersion(spark, root)
     require(base >= 0, s"table $root has no committed version")
-    val dirs = readManifest(spark, root, base)
-    val byDir = statsByDir(spark, root, Some(base))
-    val schema = cheapSchema(spark, root, base)
+    val schema = tableSchema(spark, root, base)
       .getOrElse(read(spark, root, Some(base)).schema)
-    val pred = resolveCondition(spark, schema, condition)
-    val dataRoot = new Path(root, "data")
-    // a file is AFFECTED unless its stats prove no row can match;
-    // missing stats or an unsupported predicate shape = affected
-    // (conservative: correctness never rests on the envelopes).
-    // Bloom sidecars AND with the envelope check — the same shared
-    // fileMayMatch the read path's prunedPaths uses, so a scan and a
-    // DML classify identically. This is what makes a point-keyed
-    // DELETE/UPDATE on a bloom-pinned hash column O(matching FILES)
-    // instead of O(table): random hashes span every envelope (min/max
-    // prunes nothing), but only the file whose filter saw the value
-    // may-matches. Sound because blooms have no false negatives — a
-    // "not present" file provably holds no row the equality can
-    // select. The `relevant` guard keeps sidecar reads off
-    // predicates that can't use them.
-    //
-    // CARRY IS FILE-GRANULAR: a stats-covered dir where only SOME
-    // files may match splits — the clean files carry as in-place
-    // file references (`dir/file.parquet` manifest entries, zero
-    // bytes copied) and only the may-match files rewrite. On the
-    // 1-dir/16-file shape a large append produces, a point delete
-    // therefore rewrites the ≤3 files the blooms implicate, not all
-    // 16 (the round-17 measured gap, now closed). The split is sound
-    // because `#file:` stats lines are complete per covered dir —
-    // the same invariant dir-level classification already rested on
-    // (an unlisted matching file would have mis-carried the dir).
-    val bloomPin = pred.flatMap(p =>
-      bloomColumns(spark, root, Some(base))
-        .filter(BloomSkipping.relevant(p, _)))
-    def fileAffected(dir: String, f: DataSkipping.FileStats,
-        p: org.apache.spark.sql.catalyst.expressions.Expression): Boolean =
-      DataSkipping.mayMatch(f, p) &&
-        (bloomPin.isEmpty || BloomSkipping.fileMayMatch(
-          spark, dataRoot, dir, f.path, p))
-    // (affected refs, carried refs) per manifest entry
-    val classified: Seq[(Seq[String], Seq[String])] = dirs.map { ref =>
-      (statsForRef(byDir, ref), pred) match {
-        case (Some(files), Some(p)) =>
-          val (hit, clean) =
-            files.partition(f => fileAffected(refDir(ref), f, p))
-          if (hit.isEmpty) (Seq.empty, Seq(ref)) // provably untouched
-          else if (clean.isEmpty) (Seq(ref), Seq.empty) // all files hit
-          else (hit.map(_.path), clean.map(_.path)) // split the dir
-        case _ => (Seq(ref), Seq.empty) // uncovered: conservative
-      }
-    }
-    val affected = classified.flatMap(_._1)
-    val untouched = classified.flatMap(_._2)
+    // an unresolvable predicate classifies every entry as affected
+    val classes = resolveCondition(spark, schema, condition)
+      .map(classifyFiles(spark, root, base, _))
+    val affected =
+      classes.fold(readManifest(spark, root, base))(_.mayMatch)
+    val untouched = classes.fold(Seq.empty[String])(_.noMatch)
     if (affected.isEmpty) return base // provably nothing matches
-    val affectedDf = spark.read.schema(schema).parquet(
-      affected.map(d => new Path(dataRoot, d).toString): _*)
+    val affectedDf =
+      spark.read.schema(schema).parquet(dataPaths(root, affected): _*)
     val rewritten = transform(affectedDf, condition)
     // DML must never drift the schema (names + types; nullability is
     // parquet-round-trip noise) — same shape guard as append

@@ -45,12 +45,9 @@ class VersionedTableSource extends TableProvider with DataSourceRegister {
   // schema comes from parquet footers, not user DDL
   override def supportsExternalMetadata(): Boolean = false
 
-  private def resolved(options: CaseInsensitiveStringMap): ParquetTable =
-    resolvedWithVersion(options)._1
-
-  private def resolvedWithVersion(options: CaseInsensitiveStringMap)
-      : (ParquetTable, String, Int) = {
-    val spark = SparkSession.active
+  // the table root and the version `options` pin
+  private def resolveVersion(spark: SparkSession,
+      options: CaseInsensitiveStringMap): (String, Int) = {
     val root = Option(options.get("path")).getOrElse(
       throw new IllegalArgumentException(
         "graft-versioned needs a table root: .load(<root>)"))
@@ -71,9 +68,14 @@ class VersionedTableSource extends TableProvider with DataSourceRegister {
     }
     require(version.isEmpty || tsVersion.isEmpty,
       "versionAsOf and timestampAsOf are mutually exclusive")
-    val v = version.orElse(tsVersion)
-      .getOrElse(VersionedTable.latestVersion(spark, root))
-    val dirs = VersionedTable.dataDirs(spark, root, Some(v))
+    (root, version.orElse(tsVersion)
+      .getOrElse(VersionedTable.latestVersion(spark, root)))
+  }
+
+  private def resolved(options: CaseInsensitiveStringMap)
+      : (ParquetTable, String, Int) = {
+    val spark = SparkSession.active
+    val (root, v) = resolveVersion(spark, options)
     // an evolved version's `#schema:` pin rides through as the user
     // schema — footer inference over mixed-schema commit dirs would
     // nondeterministically pick a pre-evolution file's column set,
@@ -81,7 +83,8 @@ class VersionedTableSource extends TableProvider with DataSourceRegister {
     // Non-evolved versions resolve their (uniform) schema driver-side
     // from one footer (VersionedTable.tableSchema), so a connector
     // read never pays ParquetTable's distributed inference job.
-    (ParquetTable(s"graft-versioned $root", spark, options, dirs,
+    (ParquetTable(s"graft-versioned $root", spark, options,
+      VersionedTable.dataDirs(spark, root, Some(v)),
       userSpecifiedSchema = VersionedTable.tableSchema(spark, root, v),
       fallbackFileFormat = classOf[ParquetFileFormat]), root, v)
   }
@@ -121,9 +124,19 @@ class VersionedTableSource extends TableProvider with DataSourceRegister {
     VersionedTable.changeFeed(spark, root, start, end, key)
   }
 
+  // the manifest lookups alone when the schema resolves driver-side
+  // (nullable, as the file table reports it): forcing a ParquetTable's
+  // schema would list every commit dir, and getTable builds the table
+  // anyway
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
     if (cdfRequested(options)) cdfFeed(options).schema
-    else resolved(options).schema
+    else {
+      val spark = SparkSession.active
+      val (root, v) = resolveVersion(spark, options)
+      VersionedTable.tableSchema(spark, root, v)
+        .map(VersionedTable.forceNullable(_).asInstanceOf[StructType])
+        .getOrElse(resolved(options)._1.schema)
+    }
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: JMap[String, String]): Table = {
@@ -133,7 +146,7 @@ class VersionedTableSource extends TableProvider with DataSourceRegister {
       new ChangeFeedTable(
         s"graft-versioned-cdf ${options.get("path")}", df)
     } else {
-      val (pt, root, v) = resolvedWithVersion(options)
+      val (pt, root, v) = resolved(options)
       new SnapshotStatsTable(pt, root, v)
     }
   }
@@ -142,16 +155,16 @@ class VersionedTableSource extends TableProvider with DataSourceRegister {
 /** The snapshot table the path connector serves: Spark's own
   * [[ParquetTable]] does the scanning, with the scan wrapped in the
   * SAME [[org.apache.spark.sql.graft.DirAwareScanBuilder]] the
-  * catalog uses — so a path read reports the PINNED version's
-  * manifest statistics (exact row count, column envelopes, NDV) and
-  * the two read surfaces can never drift on optimizer input. Read
+  * catalog uses — so a path read prunes files by the PINNED
+  * version's manifest stats and reports its statistics (exact row
+  * count, column envelopes, NDV), and the two read surfaces can
+  * never drift on pruning or optimizer input. Read
   * capability only: writes through a path would bypass the manifest
   * commit point (use VersionedTable / the catalog), and streaming
   * has its own source ("graft-versioned-stream") — the wrapped scan
   * refuses `toMicroBatchStream` loudly instead of serving a frozen
   * file list as a fake stream. */
-private[graft] class SnapshotStatsTable(
-    private[graft] val inner: ParquetTable,
+private[graft] class SnapshotStatsTable(inner: ParquetTable,
     root: String, version: Int)
     extends Table
     with org.apache.spark.sql.connector.catalog.SupportsRead {
@@ -168,10 +181,31 @@ private[graft] class SnapshotStatsTable(
 
   override def newScanBuilder(options: CaseInsensitiveStringMap)
       : org.apache.spark.sql.connector.read.ScanBuilder =
-    new org.apache.spark.sql.graft.DirAwareScanBuilder(
-      SparkSession.active, root, version, inner.schema,
-      VersionedTable.readManifest(SparkSession.active, root, version),
-      inner.newScanBuilder(options), options, streamable = false)
+    SnapshotStatsTable.scanBuilder(SparkSession.active, root, version,
+      inner, options)
+}
+
+private[sources] object SnapshotStatsTable {
+
+  /** The scan builder of a pinned snapshot `table` (the version's
+    * whole-manifest `ParquetTable`), shared by the path connector and
+    * the catalog: it prunes files with [[VersionedTable.classifyFiles]]
+    * under the pushed filters and scans the surviving references
+    * through a copy of `table`. */
+  def scanBuilder(spark: SparkSession, root: String, version: Int,
+      table: ParquetTable, options: CaseInsensitiveStringMap,
+      streamable: Boolean = false,
+      bucketed: Option[org.apache.spark.sql.graft.BucketLayout] = None)
+      : org.apache.spark.sql.connector.read.ScanBuilder =
+    new org.apache.spark.sql.graft.DirAwareScanBuilder(spark, root,
+      version, table.schema,
+      VersionedTable.readManifest(spark, root, version),
+      table.newScanBuilder(options),
+      VersionedTable.classifyFiles(spark, root, version, _),
+      refs => table.copy(paths = VersionedTable.dataPaths(root, refs),
+        userSpecifiedSchema = Some(table.schema))
+        .newScanBuilder(options),
+      options, streamable, bucketed)
 }
 
 /** A computed DataFrame served through the connector seam via the

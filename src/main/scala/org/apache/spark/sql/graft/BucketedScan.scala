@@ -55,7 +55,9 @@ case class BucketLayout(key: String, n: Int, sorted: Boolean)
   * blind. So every wrap forwards the delegated `ParquetScan`'s
   * estimate (file bytes × compression factor × column-pruning ratio)
   * and upgrades the row count to the EXACT manifest count when every
-  * file carries stats — an O(manifest) driver lookup, no file I/O. */
+  * file carries stats — an O(manifest) driver lookup, no file I/O.
+  * A pruned scan (`refs`: the surviving references; None = the whole
+  * version) reports the row count and envelopes of its survivors. */
 private[graft] object GraftScanStats {
   import org.apache.spark.sql.connector.expressions.NamedReference
   import org.apache.spark.sql.connector.read.Statistics
@@ -64,16 +66,20 @@ private[graft] object GraftScanStats {
   import java.util.{Optional, OptionalLong}
 
   def estimate(spark: SparkSession, root: String, version: Int,
-      delegate: Scan): Statistics = {
+      refs: Option[Seq[String]], delegate: Scan): Statistics = {
     val base = delegate match {
       case s: org.apache.spark.sql.connector.read
         .SupportsReportStatistics => Some(s.estimateStatistics())
       case _ => None
     }
-    val exactRows: Option[Long] = scala.util.Try(
-      graft.sources.VersionedTable.rowCount(spark, root, Some(version))
-    ).toOption.flatten
-    val colStats = columnStatsFor(spark, root, version,
+    val vt = graft.sources.VersionedTable
+    val exactRows: Option[Long] = scala.util.Try(refs.fold(
+      vt.rowCount(spark, root, Some(version)))(
+      vt.rowCountOf(spark, root, version, _))).toOption.flatten
+    val envs = scala.util.Try(refs.fold(
+      vt.columnEnvelopes(spark, root, Some(version)))(
+      vt.columnEnvelopesOf(spark, root, version, _))).getOrElse(Map.empty)
+    val colStats = columnStatsFor(spark, root, version, envs, exactRows,
       delegate.readSchema())
     new Statistics {
       override def sizeInBytes(): OptionalLong =
@@ -100,14 +106,11 @@ private[graft] object GraftScanStats {
     * clamped to the column's non-null row count (an HLL can
     * overshoot; the clamp is a bound the manifest knows exactly). */
   private def columnStatsFor(spark: SparkSession, root: String,
-      version: Int, schema: StructType)
+      version: Int, envs: Map[String, graft.sources.DataSkipping.ColStats],
+      rows: Option[Long], schema: StructType)
       : java.util.Map[NamedReference, ColumnStatistics] = {
     val out = new java.util.HashMap[NamedReference, ColumnStatistics]()
-    val envs = scala.util.Try(graft.sources.VersionedTable
-      .columnEnvelopes(spark, root, Some(version))).getOrElse(Map.empty)
     if (envs.isEmpty) return out
-    val rows: Option[Long] = scala.util.Try(graft.sources.VersionedTable
-      .rowCount(spark, root, Some(version))).toOption.flatten
     val ndv: Map[String, Long] = scala.util.Try(graft.sources
       .VersionedTable.tableNdv(spark, root, Some(version)))
       .getOrElse(Map.empty)
@@ -161,15 +164,16 @@ private[graft] object GraftScanStats {
 }
 
 private[graft] class BucketedDelegatingScan(spark: SparkSession,
-    root: String, version: Int, options: CaseInsensitiveStringMap,
-    delegate: Scan, key: String, n: Int, streamable: Boolean)
+    root: String, version: Int, refs: Option[Seq[String]],
+    options: CaseInsensitiveStringMap, delegate: Scan, key: String,
+    n: Int, streamable: Boolean)
     extends Scan with SupportsReportPartitioning
     with org.apache.spark.sql.connector.read.SupportsReportStatistics
     with org.apache.spark.sql.connector.read.SupportsRuntimeV2Filtering {
 
   override def estimateStatistics()
       : org.apache.spark.sql.connector.read.Statistics =
-    GraftScanStats.estimate(spark, root, version, delegate)
+    GraftScanStats.estimate(spark, root, version, refs, delegate)
 
   // Runtime BUCKET pruning (Spark's DSv2 dynamic-pruning seam, the
   // mechanism Iceberg uses for partition columns): when this table
@@ -306,9 +310,10 @@ private[graft] class BucketedDelegatingScan(spark: SparkSession,
   * The end state a 100 TB fact-fact join wants: O(read) + O(merge),
   * zero exchange, zero sort spill. */
 private[graft] class SortedBucketedDelegatingScan(spark: SparkSession,
-    root: String, version: Int, options: CaseInsensitiveStringMap,
-    delegate: Scan, key: String, n: Int, streamable: Boolean)
-    extends BucketedDelegatingScan(spark, root, version, options,
+    root: String, version: Int, refs: Option[Seq[String]],
+    options: CaseInsensitiveStringMap, delegate: Scan, key: String,
+    n: Int, streamable: Boolean)
+    extends BucketedDelegatingScan(spark, root, version, refs, options,
       delegate, key, n, streamable)
     with org.apache.spark.sql.connector.read.SupportsReportOrdering {
 

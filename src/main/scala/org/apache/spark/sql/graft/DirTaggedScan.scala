@@ -371,15 +371,26 @@ class DirTaggedReaderFactory(inner: PartitionReaderFactory,
   }
 }
 
-/** The main-scan builder for a catalog-resolved versioned table:
-  * delegates EVERYTHING to Spark's own `ParquetScanBuilder` (full
-  * pushdown fidelity — catalyst filters, column pruning) until the
-  * required columns turn out to include `_commit_dir`, at which point
-  * it switches to the per-dir tagged scan (which re-applies column
-  * pruning per dir; the pushed filters stay post-scan, which is the
-  * file source's contract anyway — data filters are always
-  * re-evaluated above the scan, so dropping their row-group hints in
-  * dir mode affects I/O, never answers).
+/** The scan builder of a pinned versioned-table snapshot, for the
+  * catalog and the path connector alike: delegates EVERYTHING to
+  * Spark's own `ParquetScanBuilder` (full pushdown fidelity —
+  * catalyst filters, column pruning) until the required columns turn
+  * out to include `_commit_dir`, at which point it switches to the
+  * per-dir tagged scan (which re-applies column pruning per dir; the
+  * pushed filters stay post-scan, which is the file source's contract
+  * anyway — data filters are always re-evaluated above the scan, so
+  * dropping their row-group hints in dir mode affects I/O, never
+  * answers).
+  *
+  * FILE PRUNING happens here, where the pushed filters arrive:
+  * `classify` (the table's manifest file classifier) splits the
+  * snapshot's references `dirNames` under the filters' conjunction,
+  * and when it proves any file clean the delegate becomes
+  * `scanOver(surviving refs)` — `inner` is the whole snapshot's
+  * builder. The filters stay on the plan above the scan, so pruning
+  * only ever removes files the stats PROVE irrelevant. Dir mode
+  * drops the entries that are clean as a whole and scans the rest
+  * whole, so `_commit_dir` keeps naming manifest entries.
   *
   * Lives in the spark.sql.graft bridge package because full-fidelity
   * filter forwarding needs the `SupportsPushDownCatalystFilters` seam
@@ -388,6 +399,9 @@ class DirTaggedReaderFactory(inner: PartitionReaderFactory,
 class DirAwareScanBuilder(spark: SparkSession, root: String,
     version: Int,
     dataSchema: StructType, dirNames: Seq[String], inner: ScanBuilder,
+    classify: org.apache.spark.sql.catalyst.expressions.Expression =>
+      graft.sources.VersionedTable.FileClasses,
+    scanOver: Seq[String] => ScanBuilder,
     options: CaseInsensitiveStringMap, streamable: Boolean = false,
     bucketed: Option[BucketLayout] = None)
     extends ScanBuilder
@@ -401,6 +415,10 @@ class DirAwareScanBuilder(spark: SparkSession, root: String,
   private var prunedData: StructType = dataSchema
   private var stored: Seq[org.apache.spark.sql.catalyst.expressions
     .Expression] = Seq.empty
+  // the pushed filters' classification, when it pruned any file
+  private var pruned: Option[graft.sources.VersionedTable.FileClasses] =
+    None
+  private var delegate: ScanBuilder = inner
 
   // the MetadataColumn contract: a DATA column with the same name
   // SHADOWS the metadata column (a CDF-relayed sink legitimately has
@@ -418,7 +436,7 @@ class DirAwareScanBuilder(spark: SparkSession, root: String,
   // bucket/streamable wraps below step aside for it.
   override def supportCompletePushDown(
       agg: org.apache.spark.sql.connector.expressions.aggregate
-        .Aggregation): Boolean = inner match {
+        .Aggregation): Boolean = delegate match {
     case a: org.apache.spark.sql.connector.read.SupportsPushDownAggregates =>
       a.supportCompletePushDown(agg)
     case _ => false
@@ -426,7 +444,7 @@ class DirAwareScanBuilder(spark: SparkSession, root: String,
 
   override def pushAggregation(
       agg: org.apache.spark.sql.connector.expressions.aggregate
-        .Aggregation): Boolean = inner match {
+        .Aggregation): Boolean = delegate match {
     case a: org.apache.spark.sql.connector.read.SupportsPushDownAggregates =>
       val ok = a.pushAggregation(agg)
       if (ok) aggPushed = true
@@ -438,13 +456,17 @@ class DirAwareScanBuilder(spark: SparkSession, root: String,
       filters: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
       : Seq[org.apache.spark.sql.catalyst.expressions.Expression] = {
     stored = filters
-    inner match {
+    pruned = filters
+      .reduceOption(org.apache.spark.sql.catalyst.expressions.And)
+      .map(classify).filter(_.pruned > 0)
+    pruned.foreach(c => delegate = scanOver(c.mayMatch))
+    delegate match {
       case f: SupportsPushDownCatalystFilters => f.pushFilters(filters)
       case _ => filters
     }
   }
 
-  override def pushedFilters: Array[Predicate] = inner match {
+  override def pushedFilters: Array[Predicate] = delegate match {
     // advisory/explain metadata; in dir mode the per-dir scans carry
     // no pushed filters, so report none
     case f: SupportsPushDownCatalystFilters if !dirMode => f.pushedFilters
@@ -459,18 +481,22 @@ class DirAwareScanBuilder(spark: SparkSession, root: String,
         requiredSchema.fields.filterNot(f => isMetaName(f.name)))
     } else {
       prunedData = requiredSchema
-      inner match {
+      delegate match {
         case c: SupportsPushDownRequiredColumns =>
           c.pruneColumns(requiredSchema)
         case _ => ()
       }
     }
 
+  // the surviving references of a pruned scan, for its statistics
+  private def refs: Option[Seq[String]] = pruned.map(_.mayMatch)
+
   override def build(): Scan =
-    if (dirMode)
-      new DirTaggedScan(spark, root, () => dirNames, dataSchema,
-        prunedData, options, stored, metaRequested)
-    else if (aggPushed) inner.build() // aggregate rows: no layout claims
+    if (dirMode) {
+      val clean = pruned.fold(Set.empty[String])(_.noMatch.toSet)
+      new DirTaggedScan(spark, root, () => dirNames.filterNot(clean),
+        dataSchema, prunedData, options, stored, metaRequested)
+    } else if (aggPushed) delegate.build() // aggregate rows: no layout claims
     else bucketed match {
       // report the bucket layout only while the key column survives
       // pruning — a keyless scan can't anchor the partitioning
@@ -480,10 +506,10 @@ class DirAwareScanBuilder(spark: SparkSession, root: String,
         val cased = prunedData.fieldNames
           .find(_.equalsIgnoreCase(key)).get
         if (sorted)
-          new SortedBucketedDelegatingScan(spark, root, version, options,
-            inner.build(), cased, n, streamable)
-        else new BucketedDelegatingScan(spark, root, version, options,
-          inner.build(), cased, n, streamable)
+          new SortedBucketedDelegatingScan(spark, root, version, refs,
+            options, delegate.build(), cased, n, streamable)
+        else new BucketedDelegatingScan(spark, root, version, refs,
+          options, delegate.build(), cased, n, streamable)
       // every catalog read reports statistics (time-traveled
       // snapshots included); only live snapshots also stream. A
       // bloom-pinned table additionally accepts RUNTIME equality
@@ -495,10 +521,10 @@ class DirAwareScanBuilder(spark: SparkSession, root: String,
           .getOrElse(Seq.empty)
           .filter(c => prunedData.fieldNames.exists(_.equalsIgnoreCase(c)))
         if (bloomCols.nonEmpty)
-          new BloomRuntimeFilteredScan(spark, root, version, options,
-            inner.build(), streamable, bloomCols)
-        else new StreamableDelegatingScan(spark, root, version,
-          options, inner.build(), streamable)
+          new BloomRuntimeFilteredScan(spark, root, version, refs,
+            options, delegate.build(), streamable, bloomCols)
+        else new StreamableDelegatingScan(spark, root, version, refs,
+          options, delegate.build(), streamable)
     }
 }
 
@@ -511,14 +537,15 @@ class DirAwareScanBuilder(spark: SparkSession, root: String,
   * modes carry extra columns the fixed catalog relation schema cannot
   * express — those route to the path connector, loudly. */
 private class StreamableDelegatingScan(spark: SparkSession,
-    root: String, version: Int, options: CaseInsensitiveStringMap,
-    delegate: Scan, streamable: Boolean = true)
+    root: String, version: Int, refs: Option[Seq[String]],
+    options: CaseInsensitiveStringMap, delegate: Scan,
+    streamable: Boolean = true)
     extends Scan
     with org.apache.spark.sql.connector.read.SupportsReportStatistics {
 
   override def estimateStatistics()
       : org.apache.spark.sql.connector.read.Statistics =
-    GraftScanStats.estimate(spark, root, version, delegate)
+    GraftScanStats.estimate(spark, root, version, refs, delegate)
 
   override def readSchema(): StructType = delegate.readSchema()
 
@@ -560,9 +587,10 @@ private class StreamableDelegatingScan(spark: SparkSession,
   * conservative everywhere (uncovered file, non-literal, unknown
   * domain all pass). */
 private class BloomRuntimeFilteredScan(spark: SparkSession,
-    root: String, version: Int, options: CaseInsensitiveStringMap,
-    delegate: Scan, streamable: Boolean, bloomCols: Seq[String])
-    extends StreamableDelegatingScan(spark, root, version, options,
+    root: String, version: Int, refs: Option[Seq[String]],
+    options: CaseInsensitiveStringMap, delegate: Scan,
+    streamable: Boolean, bloomCols: Seq[String])
+    extends StreamableDelegatingScan(spark, root, version, refs, options,
       delegate, streamable)
     with org.apache.spark.sql.connector.read.SupportsRuntimeV2Filtering {
 

@@ -11,7 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * the local masters every main runs, a speculative copy shares the
   * same cores and only adds load), and every write into a
   * manifest-published dir goes through `ManifestPublishedCommitter`,
-  * so no commit path falls back to Hadoop's staging committer. */
+  * so no commit path falls back to Hadoop's staging committer, and
+  * manifest file pruning is decided in one place. */
 class GuardSpec extends AnyFunSuite {
 
   private val root = Paths.get("src/main/scala")
@@ -54,5 +55,34 @@ class GuardSpec extends AnyFunSuite {
     val table = Files.readString(root.resolve("graft/sources/VersionedTable.scala"))
     assert(writer.findAllMatchIn(table).map(m => table.take(m.start).count(_ == '\n') + 1)
       .toSeq.isEmpty)
+  }
+
+  test("one manifest file classifier: the envelope and bloom checks " +
+    "have one caller, and no optimizer rule skips files") {
+    // `mayMatch(` outside the two files that define (and recurse
+    // through) their own `mayMatch`
+    val mayMatch = raw"\bmayMatch\(".r
+    val fileMayMatch = raw"\bfileMayMatch\(".r
+    def calls(re: scala.util.matching.Regex, skip: Set[String]) =
+      sources.flatMap { case (p, text) =>
+        val rel = root.relativize(p).toString
+        if (skip(rel)) Nil
+        else re.findAllMatchIn(text)
+          .filterNot(m => text.take(m.start).endsWith("def ")).map(_ => rel)
+      }
+    val owners = Set("graft/sources/DataSkipping.scala",
+      "graft/sources/BloomSkipping.scala")
+    assert(calls(mayMatch, owners) == Seq("graft/sources/VersionedTable.scala"))
+    assert(calls(fileMayMatch, Set.empty) == Seq("graft/sources/VersionedTable.scala"))
+    val classifier = Files.readString(root.resolve("graft/sources/VersionedTable.scala"))
+    val body = classifier.drop(classifier.indexOf("def classifyFiles("))
+    val end = body.indexOf("\n  def ", 1)
+    assert(mayMatch.findFirstIn(body.take(end)).isDefined &&
+      fileMayMatch.findFirstIn(body.take(end)).isDefined)
+    // the optimizer rules the extensions inject: none of them prunes files
+    val ext = Files.readString(root.resolve("graft/GraftExtensions.scala"))
+    val injected = raw"injectOptimizerRule\(_ => graft\.plans\.(\w+)\(".r
+      .findAllMatchIn(ext).map(_.group(1)).toSet
+    assert(injected == Set("RangeJoinRewrite", "VersionedCountRule"))
   }
 }

@@ -69,6 +69,26 @@ class BloomSkippingSpec extends SparkSpec {
     } finally rm(dir)
   }
 
+  test("a connector read on a bloom-pinned column prunes by bloom") {
+    val dir = tmp()
+    try {
+      val root = dir.resolve("t").toString
+      buildTable(root)
+      VersionedTable.enableBloomFilters(spark, root, Seq("fp", "h"))
+      val probe = spark.range(123, 124)
+        .select(md5(col("id").cast("string"))).head.getString(0)
+      val cond = col("fp") === probe
+      val (pruned, covered) = prunes(root, cond)
+      assert(covered == 6 && pruned >= 4)
+      val df = spark.read.format(classOf[VersionedTableSource].getName)
+        .load(root).filter(cond)
+      assert(DataSkippingSpec.scannedFiles(df).size == covered - pruned)
+      val want = VersionedTable.read(spark, root).filter(cond)
+        .collect().toSeq
+      assert(df.collect().toSeq == want && want.size == 1)
+    } finally rm(dir)
+  }
+
   test("no false negatives, string and long domains: every present " +
     "value still scans its file (exhaustive)") {
     val dir = tmp()

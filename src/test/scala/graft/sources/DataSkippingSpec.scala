@@ -7,14 +7,17 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.graft.PlanBridge
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.Filter
-import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2Relation, DataSourceV2ScanRelation}
-import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.datasources.FilePartition
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 
 /** Manifest-stats file skipping: collection at commit time, the
   * conservative may-match evaluator, readWhere equivalence, and the
-  * optimizer rule over the DSv2 connector. */
+  * pruned DSv2 scans of the path connector and the catalog. */
 class DataSkippingSpec extends SparkSpec {
+
+  import DataSkippingSpec.scannedFiles
 
   import SparkSpec.session.implicits._
 
@@ -114,36 +117,18 @@ class DataSkippingSpec extends SparkSpec {
     }
   }
 
-  test("the optimizer rule prunes the DSv2 relation's file list") {
+  test("the scan builder prunes the DSv2 scan's file list") {
     withTable { root =>
       threeBatches(root)
-      val df = spark.read.format("graft-versioned").load(root)
-        .filter($"id".between(120, 180))
-      val analyzed = df.queryExecution.analyzed
-      val rewritten = plans().apply(analyzed)
-      val tables = rewritten.collect {
-        case r: DataSourceV2Relation => r.table
-      }
-      assert(tables.size == 1)
-      val pt = tables.head.asInstanceOf[ParquetTable]
-      assert(pt.paths.size == 1, s"expected 1 surviving file: ${pt.paths}")
-      // the rewritten plan still answers identically; the plain side
-      // runs with the session's injected copy of the rule excluded
-      val viaRule = PlanBridge.ofRows(spark, rewritten)
-        .collect().map(_.toSeq).toSet
-      val excluded = "spark.sql.optimizer.excludedRules"
-      spark.conf.set(excluded, classOf[graft.plans.VersionedSkipRule].getName)
-      val plain = try df.collect().map(_.toSeq).toSet
-        finally spark.conf.unset(excluded)
-      assert(viaRule == plain)
-      assert(df.queryExecution.optimizedPlan.collect {
-        case s: DataSourceV2ScanRelation =>
-          s.relation.options.containsKey("__graft_skip_applied")
-      } == Seq(false), "the plain side must scan every file")
-      // marked relations are left alone (fixed-point safety)
-      assert(plans().apply(rewritten).collect {
-        case r: DataSourceV2Relation => r.table
-      }.head.asInstanceOf[ParquetTable].paths == pt.paths)
+      val cond = $"id".between(120, 180)
+      val df = connector(root).filter(cond)
+      assert(scannedFiles(df).size == 1,
+        s"expected 1 surviving file: ${scannedFiles(df)}")
+      // the pruned scan answers exactly like the unpruned read
+      assert(rowSet(df) == rowSet(VersionedTable.read(spark, root)
+        .filter(cond)))
+      // no filter, no pruning
+      assert(scannedFiles(connector(root)).size == 3)
     }
   }
 
@@ -152,14 +137,57 @@ class DataSkippingSpec extends SparkSpec {
       threeBatches(root)
       assert(VersionedTable.readWhere(spark, root, $"id" > 9999L)
         .count() == 0)
-      val df = spark.read.format("graft-versioned").load(root)
-        .filter($"id" > 9999L)
-      val rewritten = plans().apply(df.queryExecution.analyzed)
-      val pt = rewritten.collect {
-        case r: DataSourceV2Relation => r.table
-      }.head.asInstanceOf[ParquetTable]
-      assert(pt.paths.isEmpty)
-      assert(PlanBridge.ofRows(spark, rewritten).count() == 0)
+      val df = connector(root).filter($"id" > 9999L)
+      assert(scannedFiles(df).isEmpty)
+      assert(df.collect().isEmpty)
+    }
+  }
+
+  test("a pinned connector read classifies with its own version's " +
+    "stats, not the latest manifest's") {
+    withTable { root =>
+      twoFilesThenDelete(root)
+      val v0 = connector(root, Some(0)).filter($"id" >= 120L)
+      assert(v0.count() == 80L)
+      assert(rowSet(v0) == rowSet(VersionedTable.read(spark, root, Some(0))
+        .filter($"id" >= 120L)))
+      assert(VersionedTable.readWhere(spark, root, $"id" >= 120L,
+        Some(0)).count() == 80L)
+      withCatalog(root) { t =>
+        assert(spark.sql(s"SELECT id FROM $t VERSION AS OF 0 " +
+          "WHERE id >= 120").count() == 80L)
+      }
+    }
+  }
+
+  test("a file-reference manifest entry prunes in a connector read") {
+    withTable { root =>
+      twoFilesThenDelete(root)
+      // latest manifest: the carried file as a `dir/file.parquet`
+      // reference, plus the delete's rewrite of the other file
+      val refs = VersionedTable.readManifest(spark, root,
+        VersionedTable.latestVersion(spark, root))
+      assert(refs.count(VersionedTable.refIsFile) == 1 && refs.size == 2,
+        s"expected one carried file reference: $refs")
+      val df = connector(root).filter($"id" >= 120L)
+      assert(scannedFiles(df).size == 1,
+        s"the carried low-range file must prune: ${scannedFiles(df)}")
+      assert(df.count() == 79L)
+    }
+  }
+
+  test("a catalog SELECT ... WHERE plans only the may-match files") {
+    withTable { root =>
+      threeBatches(root)
+      withCatalog(root) { t =>
+        val cond = "id BETWEEN 120 AND 180"
+        val df = spark.sql(s"SELECT * FROM $t WHERE $cond")
+        assert(scannedFiles(df).size == 1,
+          s"expected 1 surviving file: ${scannedFiles(df)}")
+        assert(rowSet(df) == rowSet(VersionedTable.read(spark, root)
+          .filter(cond)))
+        assert(scannedFiles(spark.sql(s"SELECT * FROM $t")).size == 3)
+      }
     }
   }
 
@@ -172,9 +200,8 @@ class DataSkippingSpec extends SparkSpec {
       val ids = byDir.values.flatten.flatMap(_.col("id")).toSeq
       assert(ids.flatMap(_.min).map(_.asInstanceOf[Long]).min == 0L)
       assert(ids.flatMap(_.max).map(_.asInstanceOf[Long]).max == 299L)
-      // time travel to v2 (pre-compact) still answers exactly — its
-      // dirs are absent from the latest manifest, so the rule finds
-      // no stats for them and never mis-prunes
+      // time travel to v2 (pre-compact) still answers exactly — it
+      // classifies with its own version's stats
       val old = VersionedTable.read(spark, root, Some(2))
         .filter($"id" === 250L)
       assert(old.count() == 1)
@@ -373,5 +400,49 @@ class DataSkippingSpec extends SparkSpec {
     }
   }
 
-  private def plans() = graft.plans.VersionedSkipRule()
+  private def connector(root: String, version: Option[Int] = None)
+      : DataFrame = {
+    val r = spark.read.format(classOf[VersionedTableSource].getName)
+    version.fold(r)(v => r.option("versionAsOf", v.toLong)).load(root)
+  }
+
+  private def rowSet(df: DataFrame): Set[Seq[Any]] =
+    df.collect().map(_.toSeq).toSet
+
+  /** ids 0..199 as one commit of 2 range-split files, then
+    * `delete(id === 150)`: the low file carries as a file reference,
+    * the high file rewrites. */
+  private def twoFilesThenDelete(root: String): Unit = {
+    VersionedTable.init(spark, root, VersionedTable.cluster(
+      spark.range(0, 200).toDF("id"), Seq("id"), 2))
+    assert(VersionedTable.statsByDir(spark, root).values.flatten.size == 2)
+    VersionedTable.delete(spark, root, $"id" === 150L)
+  }
+
+  /** `root` served by a fresh `graft` catalog whose warehouse is its
+    * parent dir; `f` gets the table's qualified name. */
+  private def withCatalog(root: String)(f: String => Unit): Unit = {
+    val cat = "gskip" + java.util.UUID.randomUUID.toString.take(8)
+    val key = s"spark.sql.catalog.$cat"
+    spark.conf.set(key, classOf[GraftCatalog].getName)
+    spark.conf.set(s"$key.warehouse",
+      new java.io.File(root).getParentFile.getAbsolutePath)
+    try f(s"$cat.${new java.io.File(root).getName}")
+    finally {
+      spark.conf.unset(key)
+      spark.conf.unset(s"$key.warehouse")
+    }
+  }
+}
+
+object DataSkippingSpec extends AdaptiveSparkPlanHelper {
+
+  /** The files the executed plan's DSv2 scans read. */
+  def scannedFiles(df: DataFrame): Seq[String] =
+    collect(df.queryExecution.executedPlan) {
+      case b: BatchScanExec => b.inputPartitions.flatMap {
+        case fp: FilePartition => fp.files.map(_.filePath.toString).toSeq
+        case _ => Seq.empty
+      }
+    }.flatten
 }

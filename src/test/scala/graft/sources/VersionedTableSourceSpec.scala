@@ -54,6 +54,23 @@ class VersionedTableSourceSpec extends SparkSpec {
     assert(q.as[Long].collect().sorted.toSeq == (91L to 100L))
   }
 
+  test("inferSchema equals read(..).schema on evolved and unevolved " +
+    "versions") {
+    val root = freshRoot()
+    VersionedTable.init(spark, root, snapshot(1L -> "a"))
+    VersionedTable.append(spark, root,
+      Seq((2L, "b", Some(7L))).toDF("id", "body", "extra"),
+      expectedVersion = 0, evolveSchema = true)
+    assert(VersionedTable.manifestSchema(spark, root, 0).isEmpty)
+    assert(VersionedTable.manifestSchema(spark, root, 1).isDefined)
+    for (v <- Seq(0, 1)) {
+      val opts = new org.apache.spark.sql.util.CaseInsensitiveStringMap(
+        java.util.Map.of("path", root, "versionAsOf", v.toString))
+      assert(new VersionedTableSource().inferSchema(opts) ==
+        VersionedTable.read(spark, root, Some(v)).schema, s"version $v")
+    }
+  }
+
   test("a connector frame pinned before a merge still reads the old snapshot") {
     val root = freshRoot()
     VersionedTable.init(spark, root, snapshot(1L -> "a", 2L -> "b"))
