@@ -4,11 +4,12 @@ import scala.collection.mutable.ArrayBuffer
 import scala.util.chaining._
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.{Partitioner, TaskContext}
+import org.apache.spark.{Partitioner, ShuffleDependency, TaskContext}
 import org.apache.spark.rdd.{RDD, ShuffledRDD}
 import org.apache.spark.sql.{Column, Dataset, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Literal, Murmur3HashFunction, Rand}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.SchedulerBridge
 import org.apache.spark.sql.types.DoubleType
 
 import graft.core.{GaConfig, Genome, Individual, Lcg48, Tournament}
@@ -55,7 +56,12 @@ case class SgaResult(
   * accumulator, and materialization (local checkpoint or parquet write)
   * is the only action. That is one Spark job per generation with no
   * Catalyst planning in the in-memory loop, where the reference paid a
-  * Hadoop job (MapReduce.java:281-302).
+  * Hadoop job (MapReduce.java:281-302). In memory it is also one stage,
+  * as Hadoop's `ChainReducer` chains mappers after a reducer: the task
+  * that breeds a partition caches its chunk and keys it straight into
+  * the next generation's exchange, whose map stage is the job
+  * (`SchedulerBridge.runMapStage`), so no stage re-reads the cached
+  * population to mix it.
   *
   * The core keeps Spark's per-record costs out of a generation:
   *  - a generation is one chunk per partition (its genomes, in row
@@ -152,11 +158,15 @@ object Sga {
   /** Reference op 11, the generation loop, until best >= n - slack or
     * `maxGenerations`; `onGeneration(gen, best, millis)` is the
     * reference's `GA:<it>:<n>:<pop>:<best>:<millis>` record. In memory,
-    * each generation is local-checkpointed and the one before released.
-    * With `durableRoot`, each lands in `root/gen=k` and the next steps
-    * from the RELOADED files (the reference's HDFS round trip): as the
-    * mixing key depends on the layout, that makes a resumed run
-    * (from the latest generation) equal an uninterrupted one. */
+    * each generation is local-checkpointed and the one before released,
+    * and a generation is one Spark stage: the job that breeds generation
+    * g also writes the exchange that mixes it for g + 1, so `millis`
+    * includes that write, generation 1's is written by generation 0's
+    * job, and the last generation writes none. With `durableRoot`, each
+    * lands in `root/gen=k` and the next steps from the RELOADED files
+    * (the reference's HDFS round trip): as the mixing key depends on the
+    * layout, that makes a resumed run (from the latest generation) equal
+    * an uninterrupted one. */
   def runLoop(spark: SparkSession, cfg: GaConfig,
       onGeneration: (Int, Long, Long) => Unit = (_, _, _) => (),
       durableRoot: Option[String] = None): SgaResult = {
@@ -165,34 +175,50 @@ object Sga {
     result
   }
 
-  /** `runLoop`, also returning its last generation, still materialized. */
+  /** The exchange that mixes a generation: its genomes keyed by mixing key. */
+  private[sga] type Mixing = ShuffledRDD[Double, Array[Long], Array[Long]]
+
+  /** `runLoop`, also returning its last generation, still materialized;
+    * `onMixing` sees each exchange the loop breeds a generation from. */
   private[sga] def generations(spark: SparkSession, cfg: GaConfig,
       onGeneration: (Int, Long, Long) => Unit,
-      durableRoot: Option[String]): (SgaResult, RDD[Array[Array[Long]]]) = {
+      durableRoot: Option[String],
+      onMixing: Mixing => Unit = _ => ()): (SgaResult, RDD[Array[Array[Long]]]) = {
     import spark.implicits._
     def bestOf(gen: Int) =
       new BestAccumulator().tap(spark.sparkContext.register(_, s"sga_best_gen_$gen"))
     def rows(pop: RDD[Array[Array[Long]]]): Dataset[Individual] =
       spark.createDataset(pop.flatMap(_.iterator.map(Individual(_, 0L))))
-    // the generation's one action; the files keep `evaluate`'s schema
-    def materialize(pop: RDD[Array[Array[Long]]], gen: Int): RDD[Array[Array[Long]]] =
+    // the generation's one action; the files keep `evaluate`'s schema.
+    // In memory, unless the generation is the last, the action writes the
+    // exchange that mixes it, handed back with it; its lineage is cut
+    // once the job is done
+    def materialize(pop: RDD[Array[Array[Long]]],
+        gen: Int): (RDD[Array[Array[Long]]], Option[Mixing]) =
       durableRoot match {
         case Some(root) =>
           saveGeneration(evaluate(rows(pop)), root, gen)
-          chunks(loadGeneration(spark, root, gen))
+          (chunks(loadGeneration(spark, root, gen)), None)
         case None =>
           pop.localCheckpoint()
-          spark.sparkContext.runJob(pop, new Drain[Array[Array[Long]]], pop.partitions.indices,
-            (_: Int, _: Unit) => ())
-          pop
+          if (gen == cfg.maxGenerations) {
+            spark.sparkContext.runJob(pop, new Drain[Array[Array[Long]]], pop.partitions.indices,
+              (_: Int, _: Unit) => ())
+            (pop, None)
+          } else {
+            val mixed = mixing(pop, cfg, gen)
+            SchedulerBridge.runMapStage(
+              mixed.dependencies.head.asInstanceOf[ShuffleDependency[_, _, _]])
+            (pop, Some(mixed))
+          }
       }
     val first = bestOf(0)
     val resumeFrom = durableRoot.flatMap(latestGeneration(spark, _))
-    var pop = resumeFrom match {
+    var (pop, mixed) = resumeFrom match {
       case Some(g) =>
         val saved = chunks(loadGeneration(spark, durableRoot.get, g))
         saved.foreach(_.foreach(genome => first.add((genome, Genome.popcount(genome)))))
-        saved
+        (saved, None)
       case None =>
         materialize(initPopulation(spark, cfg).rdd.mapPartitions(it => scored(it.map(_.genome), first)), 0)
     }
@@ -202,12 +228,15 @@ object Sga {
     while (!cfg.converged(fittest._2) && gen < cfg.maxGenerations) {
       val t0 = System.nanoTime()
       val acc = bestOf(gen + 1)
-      val bred = breed(pop, cfg, gen, acc)
+      // durable generations are mixed from their reloaded files
+      val bred = mixed.getOrElse(mixing(pop, cfg, gen)).tap(onMixing).mapPartitionsWithIndex(
+        new Breed(cfg.seed * 7919L + gen * 104729L, cfg.tournamentSize, acc))
       // reference op 14: the incremental variant's offspring dedup
-      val next = materialize(if (!cfg.dedupOffspring) bred
+      val (next, nextMixed) = materialize(if (!cfg.dedupOffspring) bred
         else chunks(rows(bred).dropDuplicates("genome")), gen + 1)
       pop.unpersist(blocking = false)
       pop = next
+      mixed = nextMixed
       gen += 1
       fittest = acc.value
       history += fittest._2
@@ -216,24 +245,20 @@ object Sga {
     (SgaResult(fittest._1, fittest._2, gen, history.toSeq), pop)
   }
 
-  /** One generation, ops 7-10 + 3, with `mix`'s permutation and
-    * `SgaReference.selectAndCross`'s draws: the key is catalyst's own
-    * `Rand`, seeded as in `mix` and initialized with the partition index,
-    * the exchange routes it as Spark SQL's hash partitioning does, and
-    * each reduce task sorts its records by key as `sortWithinPartitions`
-    * does. Fitness is recomputed after the exchange. Both stages are
-    * named functions, which Spark's closure cleaner leaves unparsed. */
-  private[sga] def breed(pop: RDD[Array[Array[Long]]], cfg: GaConfig, gen: Int,
-      acc: BestAccumulator): RDD[Array[Array[Long]]] =
+  /** Ops 7-8, the exchange that mixes generation `gen` with `mix`'s
+    * permutation: the key is catalyst's own `Rand`, seeded as in `mix`
+    * and initialized with the partition index, and the exchange routes
+    * it as Spark SQL's hash partitioning does. */
+  private def mixing(pop: RDD[Array[Array[Long]]], cfg: GaConfig, gen: Int): Mixing =
     new ShuffledRDD[Double, Array[Long], Array[Long]](
         pop.mapPartitionsWithIndex(new MixKeys(cfg.seed * 1000003L + gen)),
         new MixPartitioner(cfg.numPartitions))
       .setSerializer(new MixRecordSerializer)
-      .mapPartitionsWithIndex(
-        new Breed(cfg.seed * 7919L + gen * 104729L, cfg.tournamentSize, acc))
 
-  /** Breed's map side: each genome keyed by the next draw of `Rand`,
-    * seeded with `mixSeed` and initialized with the partition index. */
+  /** The exchange's map side: each genome keyed by the next draw of `Rand`,
+    * seeded with `mixSeed` and initialized with the partition index. Both
+    * sides of the exchange are named functions, which Spark's closure
+    * cleaner leaves unparsed. */
   private final class MixKeys(mixSeed: Long)
       extends ((Int, Iterator[Array[Array[Long]]]) => Iterator[(Double, Array[Long])])
       with Serializable {
@@ -244,9 +269,11 @@ object Sga {
     }
   }
 
-  /** Breed's reduce side: the partition's records in key order, then
-    * tournament selection and crossover with `Lcg48(rngSeed + p)`, the
-    * children scored into `acc`. */
+  /** The exchange's reduce side, ops 9-10 + 3 with
+    * `SgaReference.selectAndCross`'s draws: the partition's records in
+    * key order (as `sortWithinPartitions` orders them), then tournament
+    * selection and crossover with `Lcg48(rngSeed + p)`, the children
+    * re-scored into `acc`. */
   private[sga] final class Breed(rngSeed: Long, tournamentSize: Int, acc: BestAccumulator)
       extends ((Int, Iterator[(Double, Array[Long])]) => Iterator[Array[Array[Long]]])
       with Serializable {

@@ -12,7 +12,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * same cores and only adds load), and every write into a
   * manifest-published dir goes through `ManifestPublishedCommitter`,
   * so no commit path falls back to Hadoop's staging committer, and
-  * manifest file pruning is decided in one place. */
+  * manifest file pruning is decided in one place. Spark's private
+  * scheduler calls stay in one bridge, which only the SGA loop uses. */
 class GuardSpec extends AnyFunSuite {
 
   private val root = Paths.get("src/main/scala")
@@ -84,5 +85,17 @@ class GuardSpec extends AnyFunSuite {
     val injected = raw"injectOptimizerRule\(_ => graft\.plans\.(\w+)\(".r
       .findAllMatchIn(ext).map(_.group(1)).toSet
     assert(injected == Set("RangeJoinRewrite", "VersionedCountRule"))
+  }
+
+  test("submitMapStage and doCheckpoint are named only in SchedulerBridge, " +
+    "which only graft.sga calls") {
+    def naming(re: scala.util.matching.Regex) = sources.collect {
+      case (p, text) if re.findFirstIn(text).isDefined => root.relativize(p).toString
+    }.sorted
+    val bridge = "org/apache/spark/sql/graft/SchedulerBridge.scala"
+    assert(naming(raw"\b(submitMapStage|doCheckpoint)\b".r) == Seq(bridge))
+    assert(naming(raw"\bSchedulerBridge\b".r).filterNot(_ == bridge)
+      .forall(_.startsWith("graft/sga/")))
+    assert(naming(raw"\bSchedulerBridge\b".r).contains("graft/sga/Sga.scala"))
   }
 }

@@ -1,12 +1,16 @@
 package graft.sga
 
 import java.nio.file.Files
+import java.util.concurrent.ConcurrentHashMap
 
 import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
 import scala.math.Ordering.Implicits.seqOrdering
 
 import org.apache.spark.ShuffleDependency
 import org.apache.spark.rdd.RDD
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart,
+  SparkListenerStageCompleted, SparkListenerStageSubmitted}
 import org.apache.spark.storage.StorageLevel
 import org.scalatest.concurrent.Eventually._
 import org.scalatest.time.SpanSugar._
@@ -159,24 +163,46 @@ class SgaSpec extends SparkSpec {
     }
   }
 
+  private def shuffles(rdd: RDD[_]): Seq[ShuffleDependency[_, _, _]] = rdd.dependencies.flatMap {
+    case s: ShuffleDependency[_, _, _] => s +: shuffles(s.rdd)
+    case d => shuffles(d.rdd)
+  }
+
   test("a generation is one genome chunk per partition, mixed by an unsorted raw-record shuffle") {
     val c = cfg.copy(maxGenerations = 2, convergenceSlack = -1)
-    val (_, last) = Sga.generations(spark, c, (_, _, _) => (), None)
+    val handed = ArrayBuffer[ShuffleDependency[_, _, _]]()
+    val (_, last) = Sga.generations(spark, c, (_, _, _) => (), None,
+      mixed => handed ++= shuffles(mixed))
     try {
       assert(last.mapPartitions(it => Iterator.single(it.size)).collect().toSeq ==
         Seq.fill(c.numPartitions)(1))
-      def shuffles(rdd: RDD[_]): Seq[ShuffleDependency[_, _, _]] = rdd.dependencies.flatMap {
-        case s: ShuffleDependency[_, _, _] => s +: shuffles(s.rdd)
-        case d => shuffles(d.rdd)
+      // each exchange a generation is bred from (the materialized
+      // generation before it ends its lineage)
+      assert(handed.size == c.maxGenerations)
+      handed.foreach { mixing =>
+        assert(mixing.keyOrdering.isEmpty, "the exchange sorts records by key again")
+        assert(mixing.serializer.isInstanceOf[MixRecordSerializer])
       }
-      // the next generation's exchange (the materialized one ends the lineage)
-      val acc = new BestAccumulator
-      spark.sparkContext.register(acc)
-      val mixing = shuffles(Sga.breed(last, c, c.maxGenerations, acc))
-      assert(mixing.size == 1)
-      assert(mixing.head.keyOrdering.isEmpty, "the exchange sorts records by key again")
-      assert(mixing.head.serializer.isInstanceOf[MixRecordSerializer])
     } finally last.unpersist(blocking = true)
+  }
+
+  test("lineage and shuffle retention stay bounded: the last generation ends at " +
+      "its local checkpoint, each exchange reaches one shuffle") {
+    def depth(rdd: RDD[_]): Int =
+      1 + rdd.dependencies.map(d => depth(d.rdd)).maxOption.getOrElse(0)
+    val c = cfg.copy(popSize = 256, convergenceSlack = -1)
+    val depths = Seq(3, 30).map { n =>
+      val reached = ArrayBuffer[Int]()
+      val (r, last) = Sga.generations(spark, c.copy(maxGenerations = n), (_, _, _) => (), None,
+        mixed => reached += shuffles(mixed).size)
+      try {
+        assert(r.generations == n)
+        assert(reached.toSeq == Seq.fill(n)(1), s"exchanges after $n generations")
+        assert(last.isCheckpointed, s"the last of $n generations is not checkpointed")
+        depth(last)
+      } finally last.unpersist(blocking = true)
+    }
+    assert(depths.distinct.size == 1, s"lineage depth after 3 and 30 generations: $depths")
   }
 
   test("breed's reduce side sorts by mixing key stably: tied keys keep their fetch order") {
@@ -211,6 +237,35 @@ class SgaSpec extends SparkSpec {
     eventually(timeout(10.seconds), interval(100.millis)) {
       assert(sc.statusTracker.getJobIdsForGroup(group).length == 1 + c.maxGenerations)
     }
+  }
+
+  test("an in-memory runLoop runs one Spark stage per generation, plus one for generation 0") {
+    val sc = spark.sparkContext
+    val c = cfg.copy(maxGenerations = 3, convergenceSlack = -1)
+    val group = s"sga-stage-count-${System.nanoTime()}"
+    def inGroup(props: java.util.Properties) =
+      props != null && props.getProperty("spark.jobGroup.id") == group
+    val jobs, jobsEnded, stages, stagesCompleted = ConcurrentHashMap.newKeySet[Int]()
+    // one listener queue delivers a job's stage completions before its end
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (inGroup(e.properties)) jobs.add(e.jobId)
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (jobs.contains(e.jobId)) jobsEnded.add(e.jobId)
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        if (inGroup(e.properties)) stages.add(e.stageInfo.stageId)
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        if (e.stageInfo.failureReason.isEmpty) stagesCompleted.add(e.stageInfo.stageId)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "SGA stage count")
+      try Sga.runLoop(spark, c) finally sc.clearJobGroup()
+      eventually(timeout(10.seconds), interval(100.millis)) {
+        assert(jobsEnded.size == 1 + c.maxGenerations)
+      }
+      assert(stages.asScala.count(stagesCompleted.contains) == 1 + c.maxGenerations)
+    } finally sc.removeSparkListener(listener)
   }
 
   test("runLoop leaves no cached data behind (in memory, durable and dedup)") {
