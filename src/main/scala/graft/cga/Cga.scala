@@ -9,7 +9,7 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
-import graft.core.{Genome, Lcg48}
+import graft.core.{Genome, Lcg48, Saves}
 
 /** One split of the distributed probability vector: `probs(b)` is the
   * probability that gene bit b of this split is 1. The reference stores
@@ -92,12 +92,29 @@ case class CgaResult(
   */
 object Cga {
 
-  /** Per-partition RNG for iteration `iteration` — (seed, iteration,
-    * partition)-keyed so retries and cache evictions recompute
-    * identical draws on every path. */
-  private[cga] def iterationRng(seed: Long, iteration: Int): Random =
-    new Lcg48(seed * 6364136223846793005L + iteration * 9973L +
-      TaskContext.getPartitionId())
+  /** The RNG split `splitId` draws iteration `iteration`'s candidates
+    * from, fresh for each split — (seed, iteration, split)-keyed, as
+    * the reference gives each split its own mapper: retries, cache
+    * evictions and any partition layout recompute identical draws. */
+  private[cga] def iterationRng(seed: Long, iteration: Int, splitId: Long): Random =
+    new Lcg48(seed * 6364136223846793005L + iteration * 9973L + splitId)
+
+  /** Candidate bit draws (nBits × T per iteration) worth one task more.
+    * The vector is laid out over as many partitions as this takes, at
+    * most one per split and per core. A task costs about 0.27 ms of job
+    * latency (on 4 CPUs, running a 64-bit, T = 8 vector's iterations as
+    * 1 task instead of 4 saved about 0.8 ms each), and `sampleSplit`
+    * about 7 ns a draw on the same host, so one task's overhead buys
+    * about 37k draws: 2^15. */
+  val DrawsPerTask: Long = 1L << 15
+
+  /** The partition count `runLoop` lays `cfg`'s vector out over on
+    * `cores` cores: sized by the iteration's draws. */
+  private[cga] def partitions(cfg: CgaConfig, cores: Int): Int = {
+    val draws = cfg.nBits.toLong * cfg.tournamentSize
+    math.max(1L, math.min((draws + DrawsPerTask - 1) / DrawsPerTask,
+      math.min(cfg.numSplits, cores).toLong)).toInt
+  }
 
   /** Reference op 16 (CGAMapper, CGA.java:70-124), the sampling kernel
     * for one split: draw T candidate sub-genomes, bit b set with
@@ -173,15 +190,9 @@ object Cga {
     spark.read.parquet(s"$root/iter=$iteration").as[VectorSplit]
   }
 
-  def latestIteration(spark: SparkSession, root: String): Option[Int] = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(root), spark.sparkContext.hadoopConfiguration)
-    val p = new org.apache.hadoop.fs.Path(root)
-    if (!fs.exists(p)) None
-    else fs.listStatus(p).toSeq.map(_.getPath.getName)
-      .collect { case s if s.startsWith("iter=") => s.drop(5).toInt }
-      .maxOption
-  }
+  /** The latest completely saved iteration under `root`, if any. */
+  def latestIteration(spark: SparkSession, root: String): Option[Int] =
+    Saves.latest(spark, root, "iter=")
 
   /** A loop row: a split with its iteration's candidates, and the
     * unconverged-cell count of the update that produced the split (-1:
@@ -189,19 +200,17 @@ object Cga {
   private type Row = (SampledSplit, Long)
 
   /** An iteration's map: the update by `winner`/`loser` (none when
-    * `winner` < 0), then `t` candidates drawn with iteration
-    * `iteration`'s RNG. */
+    * `winner` < 0), then `t` candidates drawn with each split's RNG of
+    * iteration `iteration`. */
   private final class Step(cfg: CgaConfig, iteration: Int, winner: Int, loser: Int, t: Int)
       extends (Iterator[Row] => Iterator[Row]) with Serializable {
-    def apply(rows: Iterator[Row]): Iterator[Row] = {
-      val rng = iterationRng(cfg.seed, iteration)
+    def apply(rows: Iterator[Row]): Iterator[Row] =
       rows.map { case (ss, u) =>
         val (v, un) =
           if (winner < 0) (VectorSplit(ss.splitId, ss.probs), u)
           else updateSplit(ss, winner, loser, cfg.delta, cfg.lLimit, cfg.uLimit)
-        (sampleSplit(v, rng, t), un)
+        (sampleSplit(v, iterationRng(cfg.seed, iteration, v.splitId), t), un)
       }
-    }
   }
 
   /** A partition's share of an iteration's job: its rows' T candidate
@@ -259,31 +268,33 @@ object Cga {
     * update and draws iteration i's sample, and its rows carry the
     * update's unconverged counts, so iteration i's job also reads
     * iteration i−1's convergence, one iteration late. The trajectory is
-    * the sequential spelling's (same (seed, iteration, partition)-keyed
+    * the sequential spelling's (same (seed, iteration, split)-keyed
     * draws, same updates, same exit iteration — CgaSpec pins it against
     * `CgaReference`); the only extra work is one discarded deterministic
     * sample at the detection iteration, which nothing observes. For the
     * same reason an iteration's record fires one job late, with the
     * millis of its own job and driver step. Each iteration's rows are
     * persisted and the previous ones released; localCheckpoint every 20
-    * iterations bounds lineage depth. */
+    * iterations bounds lineage depth.
+    *
+    * As the draws are keyed by split, the partition layout is free: the
+    * vector is laid out over `partitions(cfg, cores)` partitions, so a
+    * small vector's job is one task and a large one's spreads over the
+    * cores. */
   def runLoop(spark: SparkSession, cfg: CgaConfig,
       durableRoot: Option[String] = None, saveEvery: Int = 10,
       onIteration: (Int, Long, Long, Long) => Unit = (_, _, _, _) => ()): CgaResult = {
     import spark.implicits._
     val sc = spark.sparkContext
     val t = cfg.tournamentSize
-    // the draws are keyed by partition: a fresh or resumed vector is
-    // laid out as its splits in id order, sliced as `sc.range` slices
-    // (a parquet read would place the saved files by size)
     val resumed = durableRoot.flatMap(r => latestIteration(spark, r).map(i =>
-      (loadVector(spark, r, i).collect().sortBy(_.splitId), i)))
+      (loadVector(spark, r, i).collect(), i)))
     val start = resumed.fold(0)(_._2)
     val vector = resumed.fold(Array.tabulate(cfg.numSplits)(id =>
       VectorSplit(id.toLong, Array.fill(cfg.splitBits)(0.5))))(_._1)
     var rows: RDD[Row] = sc.parallelize(
       vector.toSeq.map(v => (SampledSplit(v.splitId, v.probs, Array.empty), -1L)),
-      math.min(cfg.numSplits, sc.defaultParallelism))
+      partitions(cfg, sc.defaultParallelism))
     def save(r: => RDD[Row], it: Int): Unit = durableRoot.foreach(root =>
       saveVector(spark.createDataset(r.map { case (ss, _) => VectorSplit(ss.splitId, ss.probs) }),
         root, it))

@@ -8,8 +8,8 @@ import java.util.Random
   * `AtomicLong` compare-and-set that makes `Random` thread-safe.
   *
   * NOT thread-safe: each task owns its RNG (the GA kernels key theirs by
-  * seed, generation or iteration, and partition). It extends `Random`,
-  * so it goes wherever a `Random` is taken. `next`, `nextLong`,
+  * seed, generation or iteration, and partition or split). It extends
+  * `Random`, so it goes wherever a `Random` is taken. `next`, `nextLong`,
   * `nextDouble` and `setSeed` are overridden; the other draws
   * (`nextInt`, `nextBoolean`, ...) are `Random`'s own, built on `next`.
   */

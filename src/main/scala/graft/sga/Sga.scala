@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.SchedulerBridge
 import org.apache.spark.sql.types.DoubleType
 
-import graft.core.{GaConfig, Genome, Individual, Lcg48, Tournament}
+import graft.core.{GaConfig, Genome, Individual, Lcg48, Saves, Tournament}
 
 /** Driver-merged running argmax over (genome, fitness) — the Spark
   * accumulator spelling of the reference's side-channel best files +
@@ -146,14 +146,9 @@ object Sga {
     spark.read.parquet(files.sorted.toIndexedSeq: _*).as[Individual]
   }
 
-  /** Latest persisted generation id under `root`, if any. */
-  def latestGeneration(spark: SparkSession, root: String): Option[Int] = {
-    val p = new Path(root)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else fs.listStatus(p).map(_.getPath.getName)
-      .collect { case s if s.startsWith("gen=") => s.drop(4).toInt }.maxOption
-  }
+  /** The latest completely saved generation under `root`, if any. */
+  def latestGeneration(spark: SparkSession, root: String): Option[Int] =
+    Saves.latest(spark, root, "gen=")
 
   /** Reference op 11, the generation loop, until best >= n - slack or
     * `maxGenerations`; `onGeneration(gen, best, millis)` is the

@@ -13,7 +13,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * manifest-published dir goes through `ManifestPublishedCommitter`,
   * so no commit path falls back to Hadoop's staging committer, and
   * manifest file pruning is decided in one place. Spark's private
-  * scheduler calls stay in one bridge, which only the SGA loop uses. */
+  * scheduler calls stay in one bridge, which only the SGA loop uses,
+  * and the cGA never keys its draws by partition. */
 class GuardSpec extends AnyFunSuite {
 
   private val root = Paths.get("src/main/scala")
@@ -85,6 +86,16 @@ class GuardSpec extends AnyFunSuite {
     val injected = raw"injectOptimizerRule\(_ => graft\.plans\.(\w+)\(".r
       .findAllMatchIn(ext).map(_.group(1)).toSet
     assert(injected == Set("RangeJoinRewrite", "VersionedCountRule"))
+  }
+
+  test("graft.cga names no partition id: its draws are keyed by split, not by layout") {
+    val partitionIds = raw"\b(getPartitionId|partitionId|mapPartitionsWithIndex)\b".r
+    val offenders = sources.collect {
+      case (p, text) if root.relativize(p).startsWith("graft/cga") &&
+          partitionIds.findFirstIn(text).isDefined => root.relativize(p).toString
+    }
+    assert(sources.exists { case (p, _) => root.relativize(p).startsWith("graft/cga") })
+    assert(offenders.isEmpty)
   }
 
   test("submitMapStage and doCheckpoint are named only in SchedulerBridge, " +

@@ -22,16 +22,13 @@ object CgaReference {
 
   /** Reference op 16 (CGAMapper, CGA.java:70-124): sample T candidate
     * sub-genomes per split. Narrow (no shuffle); seeded per
-    * (iteration, partition). */
+    * (iteration, split). */
   def sample(vectors: Dataset[VectorSplit], cfg: CgaConfig, iteration: Int)
       : Dataset[SampledSplit] = {
     import vectors.sparkSession.implicits._
     val t = cfg.tournamentSize
     val seed = cfg.seed
-    vectors.mapPartitions { it =>
-      val rng = Cga.iterationRng(seed, iteration)
-      it.map(vs => Cga.sampleSplit(vs, rng, t))
-    }
+    vectors.map(vs => Cga.sampleSplit(vs, Cga.iterationRng(seed, iteration, vs.splitId), t))
   }
 
   /** Reference op 17+18 front half (CGA.java:126-164 side files +

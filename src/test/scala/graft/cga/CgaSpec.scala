@@ -1,6 +1,11 @@
 package graft.cga
 
 import java.nio.file.Files
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 import org.scalatest.concurrent.Eventually._
 import org.scalatest.time.SpanSugar._
@@ -115,10 +120,12 @@ class CgaSpec extends SparkSpec {
 
   /** The sequential spelling of `runLoop` over `CgaReference`'s Dataset
     * operators: sample, totals, update, then read the update's
-    * convergence, every iteration. */
-  private def referenceRun(c: CgaConfig): CgaResult = {
+    * convergence, every iteration; with `parts`, the initial vector is
+    * repartitioned to that many partitions, which every iteration keeps. */
+  private def referenceRun(c: CgaConfig, parts: Option[Int] = None): CgaResult = {
     import spark.implicits._
-    var vectors = CgaReference.initVector(spark, c)
+    val init = CgaReference.initVector(spark, c)
+    var vectors = parts.fold(init)(init.repartition(_))
     var it = 0
     var winnerFitness = -1L
     var unConverged = -1L
@@ -127,7 +134,7 @@ class CgaSpec extends SparkSpec {
       val totals = CgaReference.candidateTotals(sampled, c)
       val (w, l) = Cga.pickWinnerLoser(totals)
       winnerFitness = totals(w)
-      // the local checkpoint keeps the partition layout the draws are keyed by
+      // the local checkpoint cuts the plan each iteration would extend
       val updated = CgaReference.update(sampled, w, l, c).localCheckpoint()
       unConverged = updated.collect().map(_._2).sum
       vectors = updated.map(_._1)
@@ -158,6 +165,56 @@ class CgaSpec extends SparkSpec {
       got
     }
     assert(runs.init.forall(_.converged) && !runs.last.converged)
+  }
+
+  test("runLoop takes the reference's trajectory over any partition layout of the vector") {
+    // 8 splits: runLoop lays them out by work, the reference over 1, 2
+    // and 8 partitions
+    val c = CgaConfig(nBits = 64, numSplits = 8, tournamentSize = 8,
+      population = 20, seed = 7, maxIterations = 400)
+    val got = Cga.runLoop(spark, c)
+    assert(got.converged)
+    Seq(1, 2, 8).foreach { parts =>
+      val want = referenceRun(c, Some(parts))
+      val at = s"$parts partitions"
+      assert(got.iterations == want.iterations, at)
+      assert(got.winnerFitness == want.winnerFitness, at)
+      assert(got.converged == want.converged, at)
+      assert(got.vector.toSeq == want.vector.toSeq, at)
+    }
+  }
+
+  test("runLoop sizes its partition count by the iteration's draws") {
+    val sc = spark.sparkContext
+    // the task count of each job of a run
+    def tasksPerJob(c: CgaConfig): Seq[Int] = {
+      val group = s"cga-task-count-${System.nanoTime()}"
+      val tasks = new ConcurrentLinkedQueue[Int]()
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+            tasks.add(e.stageInfos.map(_.numTasks).sum)
+      }
+      sc.addSparkListener(listener)
+      try {
+        sc.setJobGroup(group, "cGA task count")
+        try Cga.runLoop(spark, c) finally sc.clearJobGroup()
+        eventually(timeout(10.seconds), interval(100.millis)) {
+          assert(tasks.size == sc.statusTracker.getJobIdsForGroup(group).length)
+        }
+      } finally sc.removeSparkListener(listener)
+      tasks.asScala.toSeq
+    }
+    // the `ga` benchmark's vector: 64 bits × T = 8 draws, one task
+    val bench = CgaConfig(nBits = 64, numSplits = 4, tournamentSize = 8,
+      population = 20, seed = 1000, maxIterations = 400)
+    val small = tasksPerJob(bench)
+    assert(small.nonEmpty && small.forall(_ == 1), small)
+    // 8 × DrawsPerTask draws: one task per split, at most one per core
+    val large = bench.copy(nBits = Cga.DrawsPerTask.toInt, numSplits = 8, maxIterations = 3)
+    val spread = tasksPerJob(large)
+    assert(spread.nonEmpty &&
+      spread.forall(_ == math.min(large.numSplits, sc.defaultParallelism)), spread)
   }
 
   test("runLoop runs one Spark job per iteration, plus the first and the final read") {

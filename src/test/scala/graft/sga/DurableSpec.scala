@@ -1,6 +1,7 @@
 package graft.sga
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+
 import graft.SparkSpec
 import graft.core.GaConfig
 import graft.cga.{Cga, CgaConfig}
@@ -9,6 +10,14 @@ class DurableSpec extends SparkSpec {
 
   private def tmpDir(): String =
     Files.createTempDirectory("graft-durable").toString
+
+  /** What a save cut short by a crash leaves: the dir, holding only the
+    * write's `_temporary/` with a partial task file. */
+  private def plantCutSave(root: String, dir: String): Unit = {
+    val attempt = Files.createDirectories(
+      Paths.get(root, dir, "_temporary", "0", "_temporary", "attempt_0"))
+    Files.write(attempt.resolve("part-00000.snappy.parquet"), Array[Byte](1, 2, 3))
+  }
 
   test("dedupOffspring collapses identical genomes per generation") {
     val cfg = GaConfig(nBits = 8, popSize = 2048, numPartitions = 2,
@@ -55,9 +64,43 @@ class DurableSpec extends SparkSpec {
     assert(vec.map(_.probs.length).sum == cfg.nBits)
   }
 
+  test("an SGA resume skips a generation whose save was cut short") {
+    val cfg = GaConfig(nBits = 64, popSize = 512, numPartitions = 2,
+      seed = 42, maxGenerations = 5, convergenceSlack = -1)
+    val straight = tmpDir()
+    val whole = Sga.runLoop(spark, cfg, durableRoot = Some(straight))
+    val root = tmpDir()
+    Sga.runLoop(spark, cfg.copy(maxGenerations = 3), durableRoot = Some(root))
+    plantCutSave(root, "gen=4")
+    assert(Sga.latestGeneration(spark, root).contains(3))
+    val resumed = Sga.runLoop(spark, cfg, durableRoot = Some(root))
+    assert(resumed.generations == whole.generations)
+    assert(resumed.bestFitness == whole.bestFitness)
+    // the resumed history starts at the saved generation 3
+    assert(resumed.history == whole.history.drop(3))
+    def genomes(r: String) = Sga.loadGeneration(spark, r, 5).collect()
+      .map(_.genome.toSeq).toSeq.sorted(Ordering.Implicits.seqOrdering[Seq, Long])
+    assert(genomes(root) == genomes(straight))
+  }
+
+  test("a cGA resume skips an iteration whose save was cut short") {
+    val cfg = CgaConfig(nBits = 64, numSplits = 4, tournamentSize = 8,
+      population = 20, seed = 42, maxIterations = 400)
+    val whole = Cga.runLoop(spark, cfg)
+    val root = tmpDir()
+    Cga.runLoop(spark, cfg.copy(maxIterations = 5), durableRoot = Some(root), saveEvery = 5)
+    plantCutSave(root, "iter=6")
+    assert(Cga.latestIteration(spark, root).contains(5))
+    val resumed = Cga.runLoop(spark, cfg, durableRoot = Some(root), saveEvery = 50)
+    assert(whole.converged && resumed.converged)
+    assert(resumed.iterations == whole.iterations)
+    assert(resumed.winnerFitness == whole.winnerFitness)
+    assert(resumed.vector.toSeq == whole.vector.toSeq)
+  }
+
   test("a resumed cGA run takes the uninterrupted run's trajectory") {
-    // 4 splits over local[4]'s 4 partitions: a parquet read of the saved
-    // vector places its files by size, and the draws are keyed by partition
+    // the draws are keyed by (seed, iteration, split), so the reloaded
+    // vector's partition layout does not matter
     val cfg = CgaConfig(nBits = 64, numSplits = 4, tournamentSize = 8,
       population = 20, seed = 42, maxIterations = 400)
     val whole = Cga.runLoop(spark, cfg)
