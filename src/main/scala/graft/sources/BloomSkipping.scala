@@ -183,7 +183,7 @@ object BloomSkipping {
   private def writeSidecar(spark: SparkSession, dirPath: Path,
       colNames: Seq[String], byFile: Map[String, Array[BloomFilter]])
       : Unit = {
-    val fs = dirPath.getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = VersionedTable.fsOf(spark, dirPath)
     val tmp = new Path(dirPath,
       s".$SidecarName.tmp-${java.util.UUID.randomUUID}")
     val out = new DataOutputStream(fs.create(tmp, true))
@@ -259,7 +259,7 @@ object BloomSkipping {
     // same immutable file is harmless
     val computed: CacheVal = {
       scala.util.Try {
-        val fs = dirPath.getFileSystem(spark.sessionState.newHadoopConf())
+        val fs = VersionedTable.fsOf(spark, dirPath)
         val p = new Path(dirPath, SidecarName)
         if (!fs.exists(p)) None
         else {

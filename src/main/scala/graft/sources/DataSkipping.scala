@@ -5,6 +5,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.{LogicalTypeAnnotation, PrimitiveType}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -67,9 +68,10 @@ object DataSkipping {
 
   /** `#file:` manifest lines for every parquet file under `dataDir`,
     * deterministic order. Never throws: stats degrade to unknown. */
-  def statsLines(conf: Configuration, dataDir: Path,
+  def statsLines(spark: SparkSession, dataDir: Path,
       commitName: String): Seq[String] = {
-    val fs = dataDir.getFileSystem(conf)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = VersionedTable.fsOf(spark, dataDir)
     if (!fs.exists(dataDir)) return Seq.empty
     val paths = fs.listStatus(dataDir).map(_.getPath)
       .filter(_.getName.endsWith(".parquet"))

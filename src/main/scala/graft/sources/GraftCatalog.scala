@@ -108,8 +108,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
   override def name(): String = catalogName
 
   private def spark = SparkSession.active
-  private def fs = warehouse.getFileSystem(
-    spark.sparkContext.hadoopConfiguration)
+  private def fs = VersionedTable.fsOf(spark, warehouse)
 
   private def tablePath(ident: Identifier): Path =
     (ident.namespace() :+ ident.name())
@@ -1560,8 +1559,7 @@ private[sources] class ReplaceSnapshotWrite(root: String,
         delegate.useCommitCoordinator
       override def commit(msgs: Array[WriterCommitMessage]): Unit = {
         delegate.commit(msgs) // files durable, still invisible
-        val fs = dataDir.getFileSystem(
-          spark.sparkContext.hadoopConfiguration)
+        val fs = VersionedTable.fsOf(spark, dataDir)
         // An empty survivor set alone is NOT a no-op: a MERGE whose
         // runtime group filter pruned every target dir (no source key
         // matched) may still have written WHEN NOT MATCHED THEN INSERT
@@ -1577,7 +1575,7 @@ private[sources] class ReplaceSnapshotWrite(root: String,
         val stagedStats: Option[Seq[String]] =
           if (!staged) None
           else scala.util.Try(DataSkipping.statsLines(
-            spark.sparkContext.hadoopConfiguration, dataDir, commitName))
+            spark, dataDir, commitName))
             .toOption
         val stagedHasRows: Boolean =
           staged && (stagedStats match {
@@ -1647,8 +1645,7 @@ private[sources] class ReplaceSnapshotWrite(root: String,
       }
       override def abort(msgs: Array[WriterCommitMessage]): Unit = {
         delegate.abort(msgs)
-        dataDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          .delete(dataDir, true)
+        VersionedTable.fsOf(spark, dataDir).delete(dataDir, true)
       }
     }
   }
@@ -1710,7 +1707,7 @@ private[sources] class GraftStreamingWrite(root: String,
   override def commit(epochId: Long,
       messages: Array[WriterCommitMessage]): Unit = {
     delegate.commit(messages) // staging files durable, still invisible
-    val fs = staging.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = VersionedTable.fsOf(spark, staging)
     VersionedTable.withRetry() {
       if (VersionedTable.lastCommittedTxn(spark, root, appId)
           .contains(epochId)) {
@@ -1771,8 +1768,7 @@ private[sources] class GraftStreamingWrite(root: String,
       messages: Array[WriterCommitMessage]): Unit = {
     if (delegate != null) delegate.abort(messages)
     if (staging != null)
-      staging.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .delete(staging, true): Unit
+      VersionedTable.fsOf(spark, staging).delete(staging, true): Unit
   }
 }
 

@@ -53,7 +53,7 @@ object Io {
     spark.sql(s"DROP TABLE IF EXISTS `$table`")
     val loc = new org.apache.hadoop.fs.Path(
       spark.conf.get("spark.sql.warehouse.dir"), table)
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = VersionedTable.fsOf(spark, loc)
     if (fs.exists(loc)) fs.delete(loc, true)
     val w = df.write.mode("overwrite").format("parquet")
       .bucketBy(buckets, bucketCol)
@@ -116,7 +116,7 @@ object Io {
       targetBytes: Long = 128L * 1024 * 1024): Int = {
     require(targetBytes > 0)
     val hp = new org.apache.hadoop.fs.Path(path)
-    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = VersionedTable.fsOf(spark, hp)
     val children = fs.listStatus(hp)
       .filterNot(_.getPath.getName.startsWith("_"))
       .filterNot(_.getPath.getName.startsWith("."))

@@ -73,17 +73,21 @@ object ManifestPublishedCommitter {
       .map(_ -> classOf[ManifestPublishedCommitter].getName).toMap
 
   /** Write `df` as parquet into `dir`, a fresh dir that only a manifest
-    * will make visible. */
+    * will make visible. Its `file:` I/O goes through
+    * [[NioLocalFileSystem]], under speculation too. */
   def writeParquet(df: DataFrame, dir: Path): Unit =
-    df.write.options(writerOptions(df.sparkSession)).parquet(dir.toString)
+    df.write.options(writerOptions(df.sparkSession) ++
+      NioLocalFileSystem.writeOptions).parquet(dir.toString)
 
-  /** `info` plus [[writerOptions]]: the same selection for a delegated
-    * DSv2 file write into such a dir. */
+  /** `info` plus [[writerOptions]] and the [[NioLocalFileSystem]]
+    * options: the same selection for a delegated DSv2 file write into
+    * such a dir. */
   def withWriterOptions(spark: SparkSession,
       info: LogicalWriteInfo): LogicalWriteInfo = {
     import scala.jdk.CollectionConverters._
     val merged = new CaseInsensitiveStringMap(
-      (info.options.asCaseSensitiveMap.asScala ++ writerOptions(spark)).asJava)
+      (info.options.asCaseSensitiveMap.asScala ++ writerOptions(spark) ++
+        NioLocalFileSystem.writeOptions).asJava)
     new LogicalWriteInfo {
       override def options = merged
       override def queryId = info.queryId

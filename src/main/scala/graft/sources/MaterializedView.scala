@@ -664,7 +664,7 @@ object MaterializedView {
   def armFollow(spark: SparkSession, mvRoot: String): Unit = {
     readDef(spark, mvRoot): Unit // not-a-view refuses loudly here
     val p = new Path(mvRoot, FollowMarker)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = VersionedTable.fsOf(spark, p)
     val out = fs.create(p, true)
     try out.write("v1".getBytes("UTF-8")) finally out.close()
   }
@@ -672,14 +672,14 @@ object MaterializedView {
   /** Clear the durable follow intent (STOP's other half). Idempotent. */
   def disarmFollow(spark: SparkSession, mvRoot: String): Unit = {
     val p = new Path(mvRoot, FollowMarker)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = VersionedTable.fsOf(spark, p)
     fs.delete(p, false): Unit
   }
 
   /** Is the durable follow intent set? */
   def followArmed(spark: SparkSession, mvRoot: String): Boolean = {
     val p = new Path(mvRoot, FollowMarker)
-    p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
+    VersionedTable.fsOf(spark, p).exists(p)
   }
 
   // ---- definition persistence --------------------------------------
@@ -733,8 +733,7 @@ object MaterializedView {
         case MvHllCount(c, as) => JObject("op" -> JString("hllcount"),
           "col" -> JString(c), "as" -> JString(as))
       }.toList))
-    val fs = new Path(root).getFileSystem(
-      spark.sessionState.newHadoopConf())
+    val fs = VersionedTable.fsOf(spark, new Path(root))
     val next = latestDefPath(fs, root).map(_._2).getOrElse(0) + 1
     val p = new Path(root, s"_mvdef.v$next.json")
     val tmp = new Path(root,
@@ -753,8 +752,7 @@ object MaterializedView {
   }
 
   private def readDef(spark: SparkSession, root: String): MvDef = {
-    val fs = new Path(root).getFileSystem(
-      spark.sessionState.newHadoopConf())
+    val fs = VersionedTable.fsOf(spark, new Path(root))
     val p = latestDefPath(fs, root).map(_._1).getOrElse(defPath(root))
     require(fs.exists(p), s"$root is not a materialized view (no $DefFile)")
     val in = fs.open(p)

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Minimal log-structured table format: atomic snapshot versioning
@@ -53,10 +53,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     standard optimistic loop).
   *
   * Atomicity fine print: rename-without-replace is atomic on HDFS and
-  * ABFS (the filesystems this targets); POSIX rename would silently
-  * replace, so step 3 re-checks existence just before renaming —
-  * the residual local-FS race window is microseconds wide and local
-  * mode has no concurrent writers to race. S3 needs a DynamoDB-style
+  * ABFS, and on `file:` through [[NioLocalFileSystem]], which
+  * publishes a file by hard link (POSIX rename would silently
+  * replace). Step 3 still checks existence first, which is all a
+  * filesystem whose rename replaces gets. S3 needs a DynamoDB-style
   * commit coordinator in front of step 3 (exactly as Delta-on-S3
   * does); the protocol is unchanged.
   *
@@ -84,8 +84,15 @@ class GraftDataLossException(message: String)
 
 object VersionedTable {
 
-  private def fsOf(spark: SparkSession, p: Path) =
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+  /** The FileSystem of every driver-side table file: for `file:` the
+    * one shared [[NioLocalFileSystem]], which creates files without
+    * forking. Matched by scheme, since on Spark's jar dir `file:`
+    * resolves to Hive's `ProxyLocalFileSystem`, not Hadoop's class. */
+  private[sources] def fsOf(spark: SparkSession, p: Path): FileSystem = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = p.getFileSystem(conf)
+    if (fs.getUri.getScheme == "file") NioLocalFileSystem.shared(conf) else fs
+  }
 
   private lazy val statsLog =
     org.slf4j.LoggerFactory.getLogger("graft.sources.VersionedTable")
@@ -2181,7 +2188,7 @@ object VersionedTable {
     // (`stagedStatsLines`), so no footer is read twice.
     val statsLines = stagedStatsLines.getOrElse(
       scala.util.Try(DataSkipping.statsLines(
-        spark.sparkContext.hadoopConfiguration, dataDir, commitName))
+        spark, dataDir, commitName))
         .getOrElse(Seq.empty))
     // SKETCH MAINTENANCE (NDV + quantiles + blooms, when their pins
     // are active): carry the surviving dirs' lines verbatim, sketch
@@ -3792,10 +3799,9 @@ object VersionedTable {
       val tmp = new Path(ckDir, s".tmp-${java.util.UUID.randomUUID}")
       val out = fs.create(tmp, false)
       try out.write(Array.emptyByteArray) finally out.close()
-      // existence pre-check BEFORE the rename, mirroring commitDirs:
-      // POSIX renameTo silently replaces an existing destination and
-      // returns true, so rename-failure alone never fires on a local
-      // FS and two tails would both advance (double delivery)
+      // claimed like a manifest (writeManifest): the existence check
+      // covers a filesystem whose rename replaces; without it two
+      // tails could both advance (double delivery)
       val markerPath = new Path(ckDir, s"v$v")
       val claimed = !fs.exists(markerPath) && fs.rename(tmp, markerPath)
       if (!claimed) {

@@ -14,7 +14,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * so no commit path falls back to Hadoop's staging committer, and
   * manifest file pruning is decided in one place. Spark's private
   * scheduler calls stay in one bridge, which only the SGA loop uses,
-  * and the cGA never keys its draws by partition. */
+  * and the cGA never keys its draws by partition. The table layer
+  * resolves its files' FileSystem in one helper. */
 class GuardSpec extends AnyFunSuite {
 
   private val root = Paths.get("src/main/scala")
@@ -108,5 +109,22 @@ class GuardSpec extends AnyFunSuite {
     assert(naming(raw"\bSchedulerBridge\b".r).filterNot(_ == bridge)
       .forall(_.startsWith("graft/sga/")))
     assert(naming(raw"\bSchedulerBridge\b".r).contains("graft/sga/Sga.scala"))
+  }
+
+  test("graft.sources resolves a FileSystem only in VersionedTable.fsOf " +
+    "and in the committer's task-conf lookups") {
+    val lookup = raw"\.getFileSystem\(([^)]*)\)".r
+    val lookups = sources.flatMap { case (p, text) =>
+      val rel = root.relativize(p).toString
+      if (!rel.startsWith("graft/sources/")) Nil
+      else lookup.findAllMatchIn(text).map(m => rel -> m.group(1)).toList
+    }.sorted
+    assert(lookups == Seq(
+      "graft/sources/ManifestPublishedCommitter.scala" -> "jobContext.getConfiguration",
+      "graft/sources/ManifestPublishedCommitter.scala" -> "taskContext.getConfiguration",
+      "graft/sources/VersionedTable.scala" -> "conf"))
+    val table = Files.readString(root.resolve("graft/sources/VersionedTable.scala"))
+    val helper = table.drop(table.indexOf("def fsOf("))
+    assert(helper.take(helper.indexOf("\n  }\n")).contains(".getFileSystem(conf)"))
   }
 }
